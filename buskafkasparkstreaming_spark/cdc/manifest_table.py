@@ -7,10 +7,10 @@ stores have no atomic rename, so the rename-based commit protocol cannot
 apply. The manifest protocol replaces it:
 
 * **stage** — every merge writes its output parquet as NEW objects under
-  unique keys (`data/<txn>/part-*.parquet`); nothing is ever overwritten
+  unique keys (`data/<txn>/<id>.parquet`); nothing is ever overwritten
   or moved. (Locally, "upload" is a write into the final key path — the
-  one local rename inside `_publish_objects` stands in for S3's
-  atomic-per-key PUT, not for a commit primitive.)
+  one local rename inside `_stage` stands in for S3's atomic-per-key
+  PUT, not for a commit primitive.)
 * **commit point** — ONE manifest object (`_manifests/<n>.json`, n
   monotonically increasing) lists the complete live file set per
   partition plus the table schema. Readers resolve the HIGHEST manifest
@@ -22,6 +22,13 @@ apply. The manifest protocol replaces it:
   deletes everything unreferenced by the current manifest. A writer that
   crashes after staging but before the manifest PUT leaves only
   unreferenced keys: invisible to readers, collected by the next vacuum.
+
+Every object carries the partition column itself, as Iceberg data files do
+for identity partitions, so a read is one plain parquet scan over the keys
+the manifest selects: partition pruning is manifest key selection, and no
+value is re-attached from the manifest. The manifest marks each such object
+(`__pcol` in its stats entry); a read that selects an object without the
+marker — one written before the column was kept in the objects — raises.
 
 Merge semantics (key/partition/precombine, delete tombstones, idempotent
 replay) are identical to `UpsertTable` — both call `latest_state`; only
@@ -36,6 +43,7 @@ import os
 import re
 import shutil
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,9 +64,24 @@ class ManifestConflictError(RuntimeError):
     against it, and retries (optimistic concurrency, Delta-style)."""
 
 
+class _Staged(NamedTuple):
+    """Objects one staging write published, not yet in any manifest."""
+
+    txn: str
+    objs: dict[str, list[str]]  # partition key -> object keys
+    stats: dict[str, dict]  # object key -> stats entry
+    num_rows: dict[str, int]  # object key -> footer row count
+
+
 class ManifestUpsertTable:
     DATA_DIR = "data"
     MANIFEST_DIR = "_manifests"
+    #: staging-only copy of the partition column: `partitionBy` turns it
+    #: into the directory name, so the column itself stays in the object
+    PDIR = "__pdir"
+    #: per-object stats entry recording that the object holds the
+    #: partition column (the reader refuses objects without it)
+    PCOL_MARK = "__pcol"
 
     def __init__(
         self,
@@ -154,8 +177,8 @@ class ManifestUpsertTable:
 
     def read(self) -> DataFrame:
         """Read exactly the objects the current manifest lists (never a
-        directory listing). Partition values are re-attached from the
-        manifest — partition "pruning" is trivially explicit key
+        directory listing), in one plain scan: each object holds its own
+        partition column, and partition "pruning" is explicit key
         selection, the object-store equivalent of directory pruning."""
         m = self._current_manifest()
         if m is None:
@@ -168,84 +191,37 @@ class ManifestUpsertTable:
         vals: set | None = None,
         keep_keys: set | None = None,
     ) -> DataFrame | None:
-        """THE manifest-resolved reader (every read path funnels here):
+        """THE manifest-resolved reader (every read path funnels here): one
+        plain parquet scan over the objects the manifest selects —
         partitions restricted to string forms in `vals` when given,
-        objects restricted to `keep_keys` (zone-map survivors) when
-        given. Partition values are re-attached from the manifest.
-        Returns None when nothing matches."""
+        objects restricted to `keep_keys` (zone-map / bloom survivors)
+        when given. Every object carries the partition column, so pruning
+        is this key selection and nothing is joined back. An object
+        without the `__pcol` marker predates that layout and would read
+        its partition column as NULL: the read raises instead, deciding
+        from the manifest alone. Returns None when nothing matches."""
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(m["schema"])
-        if self.partition_col is None:
-            keys = [
-                k
-                for k in m["partitions"].get("", [])
-                if keep_keys is None or k in keep_keys
-            ]
-            if not keys:
-                return None
-            files = [os.path.join(self.path, k) for k in keys]
-            return self.spark.read.schema(schema).parquet(*files)
-        ptype = schema[self.partition_col].dataType
-        data_schema = StructType(
-            [f for f in schema.fields if f.name != self.partition_col]
-        )
-        entries = [
-            (k, val_str)
-            for val_str, keys in sorted(m["partitions"].items())
+        keys = [
+            k
+            for val_str, ks in sorted(m["partitions"].items())
             if vals is None or val_str in vals
-            for k in keys
+            for k in ks
             if keep_keys is None or k in keep_keys
         ]
-        if not entries:
+        if not keys:
             return None
-        # ONE scan over every selected object + a broadcast key→partition
-        # map (round-14 optimization): the previous form built a separate
-        # file index and scan PER partition value and unioned them — ten
-        # driver-side file listings and a ten-way union plan per read.
-        # The partition value is re-attached by joining on the object key
-        # recovered from input_file_name (the compact_clustered tagging
-        # idiom); the final cast from the manifest's string form is the
-        # same cast the per-branch literals performed. The join is LEFT +
-        # raise_error on a NULL partition value (ADVICE r14): an inner
-        # join would silently DROP every row whose key extraction missed
-        # (exotic base path, future layout rename), where the old
-        # per-partition union could not lose rows — now any extraction
-        # drift fails the read loudly instead.
-        files = [os.path.join(self.path, k) for k, _v in entries]
-        keymap = self.spark.createDataFrame(
-            entries, "__key string, __pv string"
-        )
-        tagged = (
-            self.spark.read.schema(data_schema)
-            .parquet(*files)
-            .withColumn(
-                "__key",
-                F.regexp_extract(
-                    F.input_file_name(),
-                    "(" + re.escape(self.DATA_DIR)
-                    + r"/[^/]+/[^/]+\.parquet)$",
-                    1,
-                ),
-            )
-            .join(F.broadcast(keymap), "__key", "left")
-        )
-        guarded = F.when(
-            F.col("__pv").isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "manifest read lost a row: input_file_name did "
-                        "not resolve to a manifest key (layout drift?) — "
-                    ),
-                    F.input_file_name(),
+        if self.partition_col is not None:
+            stats = m.get("stats", {})
+            unmarked = [k for k in keys if not stats.get(k, {}).get(self.PCOL_MARK)]
+            if unmarked:
+                raise ValueError(
+                    f"manifest v{m['version']} at {self.path} lists objects "
+                    f"without the partition column {self.partition_col!r} "
+                    f"(no {self.PCOL_MARK} marker): {unmarked}"
                 )
-            ),
-        ).otherwise(F.col("__pv"))
-        val = F.when(guarded == "\0null", F.lit(None)).otherwise(guarded)
-        return tagged.withColumn(
-            self.partition_col, val.cast(ptype)
-        ).drop("__key", "__pv")
+        files = [os.path.join(self.path, k) for k in keys]
+        return self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(*files)
 
     def _empty(self, m: dict) -> DataFrame:
         from pyspark.sql.types import StructType
@@ -298,10 +274,6 @@ class ManifestUpsertTable:
         out = self._read_objects(m, keep_keys=set(kept))
         pred = F.col(col).between(lo, hi)
         return self._empty(m) if out is None else out.filter(pred)
-
-    def _read_partitions(self, m: dict, vals: set) -> DataFrame | None:
-        """Manifest-resolved read of just the partitions in `vals`."""
-        return self._read_objects(m, vals=vals)
 
     # -- write ---------------------------------------------------------------
     @staticmethod
@@ -513,49 +485,99 @@ class ManifestUpsertTable:
                     out[name] = [mn, mx]
         return out
 
-    def _publish_objects(self, staging: str, txn: str) -> dict[str, list[str]]:
-        """Move staged part files under data/<txn>/ with unique keys and
-        return {partition_value_str: [relative keys]}. The os.rename here
-        emulates S3's atomic per-key upload (finalize-on-close), not a
-        commit: objects are INVISIBLE until the manifest references them."""
-        out: dict[str, list[str]] = {}
-        dst_dir = os.path.join(self.path, self.DATA_DIR, txn)
-        os.makedirs(dst_dir, exist_ok=True)
-        if self.partition_col is None:
-            entries = [("", staging)]
-        else:
-            entries = []
-            for name in os.listdir(staging):
-                if name.startswith(f"{self.partition_col}="):
-                    val = partition_dirvalue(name)
-                    entries.append((self._pval(val), os.path.join(staging, name)))
-        self._last_stats: dict[str, dict] = {}
-        self._last_num_rows: dict[str, int] = {}
-        renamed: dict[str, str] = {}  # key -> dst path
-        for val_str, src_dir in entries:
-            keys = []
-            for fname in os.listdir(src_dir):
-                if not fname.endswith(".parquet"):
-                    continue
-                key = f"{self.DATA_DIR}/{txn}/{uuid.uuid4().hex[:16]}.parquet"
-                dst = os.path.join(self.path, key)
-                os.rename(os.path.join(src_dir, fname), dst)
-                keys.append(key)
-                renamed[key] = dst
-            out[val_str] = keys
-        # footer num_rows lifted into the manifest at commit (SURVEY
-        # round-13 candidate: the stats_cols discipline) so
-        # compaction_plan never walks footers on a current-format
-        # manifest — metadata-only, ONE file open per NEW object serving
-        # num_rows, zone maps, and the bloom column (thread-pooled),
-        # amortized over every later plan
-        info = self._object_info_many(list(renamed.values()))
-        for key, dst in renamed.items():
-            n_rows, entry = info[dst]
-            self._last_num_rows[key] = n_rows
+    def _stage(
+        self,
+        df: DataFrame,
+        bin_col: str | None = None,
+        expected_rows: int | None = None,
+    ) -> _Staged:
+        """Write `df` to a staging directory and publish every part file as
+        a write-once object under data/<txn>/. The os.rename here emulates
+        S3's atomic per-key upload (finalize-on-close), not a commit:
+        objects are INVISIBLE until a manifest references them.
+
+        The partition column stays in every object; `partitionBy` runs on
+        its copy `__pdir`, so the staged directory name still carries
+        Spark's own rendering of the value — exactly the manifest key
+        (`_pval`). `bin_col` adds a second directory level so each bin
+        lands as its own object. With `expected_rows`, the staged footers
+        must account for exactly that many rows (the binned rewrites'
+        loss guard): otherwise staging is removed and the call raises
+        before anything is published.
+
+        num_rows, zone maps and blooms come from one footer pass over the
+        staged files (`_object_info_many`); every object of a partitioned
+        table also gets the `__pcol` marker the reader checks."""
+        part_cols = [bin_col] if bin_col is not None else []
+        if self.partition_col is not None:
+            df = df.withColumn(self.PDIR, F.col(self.partition_col))
+            part_cols.insert(0, self.PDIR)
+        txn = uuid.uuid4().hex[:12]
+        staging = os.path.join(self.path, f".stage_{txn}")
+        writer = df.write.mode("overwrite")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(staging)
+
+        staged = sorted(
+            os.path.join(root, fname)
+            for root, _dirs, files in os.walk(staging)
+            for fname in files
+            if fname.endswith(".parquet")
+        )
+        info = self._object_info_many(staged)
+        if expected_rows is not None:
+            staged_rows = sum(n for n, _st in info.values())
+            if staged_rows != expected_rows:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise ValueError(
+                    f"staged {staged_rows} rows but the rewritten objects "
+                    f"hold {expected_rows} — aborting before publish"
+                )
+        out = _Staged(txn, {}, {}, {})
+        os.makedirs(os.path.join(self.path, self.DATA_DIR, txn), exist_ok=True)
+        for src in staged:
+            val_str = ""
+            if self.partition_col is not None:
+                pdir = os.path.relpath(src, staging).split(os.sep, 1)[0]
+                val_str = self._pval(partition_dirvalue(pdir))
+            key = f"{self.DATA_DIR}/{txn}/{uuid.uuid4().hex[:16]}.parquet"
+            os.rename(src, os.path.join(self.path, key))
+            out.objs.setdefault(val_str, []).append(key)
+            n_rows, entry = info[src]
+            out.num_rows[key] = n_rows
+            if self.partition_col is not None:
+                entry[self.PCOL_MARK] = True
             if entry:
-                self._last_stats[key] = entry
+                out.stats[key] = entry
+        shutil.rmtree(staging, ignore_errors=True)
         return out
+
+    def _commit(self, m: dict | None, partitions: dict, schema_json: dict, staged: _Staged) -> None:
+        """PUT the next manifest version listing `partitions`. Stats and
+        num_rows carry over from `m` for keys still live (partial when `m`
+        is format-1), plus the staged objects' own. Losing the version
+        race deletes this txn's objects — they were computed against a
+        superseded base and no manifest references them — and re-raises
+        ManifestConflictError."""
+        live = {k for keys in partitions.values() for k in keys}
+        old = m or {}
+        stats = {**old.get("stats", {}), **staged.stats}
+        num_rows = {**old.get("num_rows", {}), **staged.num_rows}
+        try:
+            self._put_manifest(
+                old["version"] + 1 if m else 0,
+                partitions,
+                schema_json,
+                {k: v for k, v in stats.items() if k in live},
+                num_rows={k: int(v) for k, v in num_rows.items() if k in live},
+            )
+        except ManifestConflictError:
+            shutil.rmtree(
+                os.path.join(self.path, self.DATA_DIR, staged.txn),
+                ignore_errors=True,
+            )
+            raise
 
     @staticmethod
     def _bloom_positions(value, m_bits: int, k: int) -> list[int]:
@@ -642,19 +664,6 @@ class ManifestUpsertTable:
         pred = F.col(self.bloom_col).isin(list(values))
         return self._empty(m) if out is None else out.filter(pred)
 
-    def _carry_num_rows(self, m: dict | None, live_keys: set) -> dict:
-        """num_rows map for the next manifest: previous manifest's
-        entries + this txn's freshly published objects, restricted to
-        live keys. Partial by design when `m` is format-1."""
-        return {
-            k: int(v)
-            for k, v in {
-                **(m.get("num_rows", {}) if m is not None else {}),
-                **getattr(self, "_last_num_rows", {}),
-            }.items()
-            if k in live_keys
-        }
-
     def _put_manifest(
         self,
         version: int,
@@ -739,11 +748,11 @@ class ManifestUpsertTable:
         )
 
         m = self._current_manifest()
-        touched: set[str] = set()
+        touched = {""}  # an unpartitioned table is one partition, key ""
         if self.partition_col is not None:
             # CAST(col AS STRING) is the same rendering Spark's
             # partition-path code uses for the dir name, so these keys
-            # match what _publish_objects recovers (bool -> 'true', big
+            # match what _stage recovers (bool -> 'true', big
             # double -> '1.0E20'); Python str() of the raw value does not.
             touched = {
                 self._pval(r[0])
@@ -753,20 +762,14 @@ class ManifestUpsertTable:
                 .distinct()
                 .collect()
             }
-        if m is not None:
-            if self.partition_col is not None:
-                existing = self._read_partitions(m, touched)
-            else:
-                existing = self.read()
-            if existing is not None:
-                existing = existing.select(
-                    *existing.columns,
-                    F.lit(False).alias("__deleted"),
-                    F.lit(0).alias("__gen"),
-                )
-                incoming = existing.unionByName(
-                    incoming, allowMissingColumns=True
-                )
+        existing = self._read_objects(m, vals=touched) if m is not None else None
+        if existing is not None:
+            existing = existing.select(
+                *existing.columns,
+                F.lit(False).alias("__deleted"),
+                F.lit(0).alias("__gen"),
+            )
+            incoming = existing.unionByName(incoming, allowMissingColumns=True)
 
         merged = latest_state(
             incoming,
@@ -776,52 +779,13 @@ class ManifestUpsertTable:
             delete_col="__deleted",
         ).drop("__deleted", "__gen")
 
-        txn = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".stage_{txn}")
-        writer = merged.write.mode("overwrite")
-        if self.partition_col is not None:
-            writer = writer.partitionBy(self.partition_col)
-        writer.parquet(staging)
-        new_objs = self._publish_objects(staging, txn)
-        shutil.rmtree(staging, ignore_errors=True)
-
+        staged = self._stage(merged)
         partitions = dict(m["partitions"]) if m is not None else {}
-        if self.partition_col is None:
-            partitions[""] = new_objs.get("", [])
-        else:
-            for val_str in touched:
-                # fully-tombstoned partition: no staged objects -> empty list
-                partitions[val_str] = new_objs.get(val_str, [])
-            for val_str, keys in new_objs.items():
-                partitions[val_str] = keys
-        live_keys = {k for keys in partitions.values() for k in keys}
-        stats = {
-            k: v
-            for k, v in {
-                **(m.get("stats", {}) if m is not None else {}),
-                **getattr(self, "_last_stats", {}),
-            }.items()
-            if k in live_keys
-        }
-        version = (m["version"] + 1) if m is not None else 0
-        try:
-            self._put_manifest(
-                version,
-                partitions,
-                merged.schema.jsonValue(),
-                stats,
-                num_rows=self._carry_num_rows(m, live_keys),
-            )
-        except ManifestConflictError:
-            # Lost the race: this txn's staged objects were computed
-            # against a superseded base. They are invisible (no manifest
-            # references them) — delete them now rather than leaving them
-            # for vacuum, then let merge() retry against the winner.
-            shutil.rmtree(
-                os.path.join(self.path, self.DATA_DIR, txn),
-                ignore_errors=True,
-            )
-            raise
+        for val_str in touched:
+            # fully-tombstoned partition: no staged objects -> empty list
+            partitions[val_str] = staged.objs.get(val_str, [])
+        partitions.update(staged.objs)
+        self._commit(m, partitions, merged.schema.jsonValue(), staged)
 
     # -- maintenance ---------------------------------------------------------
     def compact(self, max_objects_per_partition: int = 4) -> list[str]:
@@ -850,60 +814,37 @@ class ManifestUpsertTable:
         }
         if not crowded:
             return []
-        if self.partition_col is None:
-            df = self._read_manifest_df(m)
-        else:
-            df = self._read_objects(m, vals=crowded)
-        txn = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".stage_{txn}")
+        df = self._read_objects(m, vals=crowded)
         if self.partition_col is not None:
             # hash-repartition on the partition column: each partition
             # value lands in exactly one task -> ONE output object per
             # partition, compacted in PARALLEL across partitions
             # (coalesce(1) would funnel every crowded partition through
             # a single task — a bottleneck at fleet scale)
-            writer = (
-                df.repartition(F.col(self.partition_col))
-                .write.mode("overwrite")
-                .partitionBy(self.partition_col)
-            )
+            df = df.repartition(F.col(self.partition_col))
         else:
-            writer = df.coalesce(1).write.mode("overwrite")
-        writer.parquet(staging)
-        new_objs = self._publish_objects(staging, txn)
-        shutil.rmtree(staging, ignore_errors=True)
+            df = df.coalesce(1)
+        staged = self._stage(df)
         partitions = dict(m["partitions"])
         for val_str in crowded:
-            partitions[val_str] = new_objs.get(val_str, [])
+            partitions[val_str] = staged.objs.get(val_str, [])
         # safety net (the merge() idiom): if the partition-value round
         # trip through the staged dir name recovered a DIFFERENT key
         # than the manifest's, land the rewritten objects under the
         # recovered key rather than dropping them on the floor
-        for val_str, keys in new_objs.items():
-            partitions[val_str] = keys
-        live_keys = {k for keys in partitions.values() for k in keys}
-        stats = {
-            k: v
-            for k, v in {
-                **m.get("stats", {}),
-                **getattr(self, "_last_stats", {}),
-            }.items()
-            if k in live_keys
-        }
-        try:
-            self._put_manifest(
-                m["version"] + 1,
-                partitions,
-                m["schema"],
-                stats,
-                num_rows=self._carry_num_rows(m, live_keys),
-            )
-        except ManifestConflictError:
-            shutil.rmtree(
-                os.path.join(self.path, self.DATA_DIR, txn), ignore_errors=True
-            )
-            raise
+        partitions.update(staged.objs)
+        self._commit(m, partitions, m["schema"], staged)
         return sorted(crowded)
+
+    def _num_rows(self, m: dict, key: str) -> int:
+        """Row count of one object: the manifest's num_rows entry, or a
+        metadata-only footer read for a key a format-1 manifest carried."""
+        n = m.get("num_rows", {}).get(key)
+        if n is not None:
+            return int(n)
+        import pyarrow.parquet as pq
+
+        return pq.read_metadata(os.path.join(self.path, key)).num_rows
 
     def compaction_plan(self, budget_rows: int) -> DataFrame:
         """FFD compaction PLAN over the current manifest's live objects
@@ -936,18 +877,8 @@ class ManifestUpsertTable:
         m = self._current_manifest()
         if m is None:
             raise FileNotFoundError(f"no manifest at {self.path}")
-        nr = m.get("num_rows", {})
-
-        def _rows(key: str) -> int:
-            n = nr.get(key)
-            if n is not None:
-                return int(n)
-            import pyarrow.parquet as pq
-
-            return pq.read_metadata(os.path.join(self.path, key)).num_rows
-
         rows = [
-            (val_str, key, _rows(key))
+            (val_str, key, self._num_rows(m, key))
             for val_str, keys in sorted(m["partitions"].items())
             for key in keys
         ]
@@ -967,10 +898,10 @@ class ManifestUpsertTable:
 
         Pure layout: rows are untouched; `latest_state` semantics never
         enter. Plan shape: ONE Spark job reads exactly the merged bins'
-        objects, tags each row with its (partition, bin) via an
-        input_file_name → key broadcast join, clusters with
-        repartition(part, bin) (co-location: every bin's rows in one
-        task) and writes partitionBy(partition, bin-dir) so each bin
+        objects, tags each row with its bin via an input_file_name →
+        key broadcast join (the partition column is in the row already),
+        clusters with repartition(part, bin) (co-location: every bin's
+        rows in one task) and writes partitionBy(partition, bin-dir) so each bin
         lands as exactly one staged file. Publish + manifest PUT follow
         the merge()/compact() crash protocol: new objects are invisible
         until the create-exclusive manifest PUT; losing a version race
@@ -985,8 +916,6 @@ class ManifestUpsertTable:
         """
         from collections import defaultdict
 
-        from pyspark.sql.types import StructType
-
         m = self._current_manifest()
         if m is None:
             raise FileNotFoundError(f"no manifest at {self.path}")
@@ -995,38 +924,27 @@ class ManifestUpsertTable:
         for r in plan_rows:
             bins[(r["part"], int(r["bin_in_part"]))].append(r["obj"])
         work = {pb: objs for pb, objs in bins.items() if len(objs) > 1}
-        report = {
-            val_str: {"before": len(keys), "after": len(keys)}
-            for val_str, keys in m["partitions"].items()
-        }
         if not work:
-            return report
+            return {
+                val_str: {"before": len(keys), "after": len(keys)}
+                for val_str, keys in m["partitions"].items()
+            }
         merged_keys = {k for objs in work.values() for k in objs}
         expected_rows = sum(
             int(r["size"]) for r in plan_rows if r["obj"] in merged_keys
         )
         keymap = self.spark.createDataFrame(
-            [(k, p, b) for (p, b), objs in work.items() for k in objs],
-            "__key string, __part string, __bin long",
+            [(k, b) for (_p, b), objs in work.items() for k in objs],
+            "__key string, __bindir long",
         )
-        schema = StructType.fromJson(m["schema"])
-        if self.partition_col is not None:
-            ptype = schema[self.partition_col].dataType
-            data_schema = StructType(
-                [f for f in schema.fields if f.name != self.partition_col]
-            )
-        else:
-            data_schema = schema
-        paths = [os.path.join(self.path, k) for k in sorted(merged_keys)]
         df = (
-            self.spark.read.schema(data_schema)
-            .parquet(*paths)
+            self._read_objects(m, keep_keys=merged_keys)
             .withColumn(
                 "__key",
                 # pattern derived from DATA_DIR, not hardcoded — a
                 # layout rename must not silently empty the extract
                 # (ADVICE r12); the staged-footer row-count assert
-                # below makes any residual drift fail loudly.
+                # makes any residual drift fail loudly.
                 F.regexp_extract(
                     F.input_file_name(),
                     "(" + re.escape(self.DATA_DIR)
@@ -1035,140 +953,42 @@ class ManifestUpsertTable:
                 ),
             )
             .join(F.broadcast(keymap), "__key")
+            .drop("__key")
         )
-        part_cols = ["__bindir"]
-        if self.partition_col is not None:
-            val = F.when(F.col("__part") == "\0null", F.lit(None)).otherwise(
-                F.col("__part")
-            )
-            df = df.withColumn(self.partition_col, val.cast(ptype))
-            part_cols = [self.partition_col, "__bindir"]
-        out = (
-            df.withColumn("__bindir", F.col("__bin"))
-            .repartition(F.col("__part"), F.col("__bin"))
-            .drop("__key", "__part", "__bin")
-        )
-        return self._stage_publish_binned(
-            out, part_cols, m, merged_keys, expected_rows, "compact_with_plan"
-        )
+        return self._publish_binned(df, m, merged_keys, expected_rows)
 
-    def _stage_publish_binned(
+    def _publish_binned(
         self,
-        out: DataFrame,
-        part_cols: list[str],
+        df: DataFrame,
         m: dict,
         retire_keys: set,
         expected_rows: int,
-        caller: str,
+        sort_col: str | None = None,
     ) -> dict[str, dict]:
         """Shared executor tail for the binned rewrites
-        (`compact_with_plan` / `compact_clustered`): stage the
-        partitionBy(part, __bindir) write, assert the staged parquet
-        footers account for EXACTLY `expected_rows` (the ADVICE-r12
-        loss guard — any key the tagging join dropped aborts BEFORE the
-        manifest PUT with staging cleaned and sources intact), publish
-        each bin file as a write-once object (atomic rename + stats +
-        num_rows lift), retire `retire_keys`, and PUT the next manifest
-        version under the create-exclusive crash protocol (losing a
-        version race deletes this txn's objects and raises).
+        (`compact_with_plan` / `compact_clustered`): co-locate each
+        (partition, `__bindir`) bin in one task, stage one object per bin
+        under the loss guard (the staged footers must hold exactly
+        `expected_rows`, else nothing is published — the ADVICE-r12
+        guard), rows sorted on `sort_col` within each bin when given,
+        retire `retire_keys`, and PUT the next manifest version under
+        the create-exclusive crash protocol.
         Returns {partition_value_str: {"before": .., "after": ..}}."""
-        txn = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f".stage_{txn}")
-        out.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
-
-        # ONE file open per staged file (round-14 optimization): the
-        # loss-guard row count, the manifest num_rows lift, the zone
-        # maps, and the bloom column all come from the same open, keyed
-        # by the pre-rename path (rename does not touch the contents)
-        staged_paths = [
-            os.path.join(root, fname)
-            for root, _dirs, files in os.walk(staging)
-            for fname in files
-            if fname.endswith(".parquet")
-        ]
-        finfo = self._object_info_many(staged_paths)
-        staged_rows = sum(n for n, _st in finfo.values())
-        if staged_rows != expected_rows:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ValueError(
-                f"{caller} staged "
-                f"{staged_rows} rows but the rewritten objects hold "
-                f"{expected_rows}: key tagging failed for some objects "
-                "(layout drift?) — aborting before publish"
-            )
-
-        # publish: one nested level deeper than _publish_objects (the
-        # __bindir split), same atomic-per-key rename + stats lift
-        def _bin_files(dirpath: str):
-            for bname in sorted(os.listdir(dirpath)):
-                if not bname.startswith("__bindir="):
-                    continue
-                bdir = os.path.join(dirpath, bname)
-                for fname in sorted(os.listdir(bdir)):
-                    if fname.endswith(".parquet"):
-                        yield os.path.join(bdir, fname)
-
-        if self.partition_col is None:
-            entries = [("", staging)]
-        else:
-            entries = [
-                (
-                    self._pval(partition_dirvalue(name)),
-                    os.path.join(staging, name),
-                )
-                for name in sorted(os.listdir(staging))
-                if name.startswith(f"{self.partition_col}=")
-            ]
-        dst_dir = os.path.join(self.path, self.DATA_DIR, txn)
-        os.makedirs(dst_dir, exist_ok=True)
-        self._last_stats = {}
-        self._last_num_rows = {}
-        new_objs: dict[str, list[str]] = {}
-        for val_str, pdir in entries:
-            keys = []
-            for fpath in _bin_files(pdir):
-                key = f"{self.DATA_DIR}/{txn}/{uuid.uuid4().hex[:16]}.parquet"
-                dst = os.path.join(self.path, key)
-                n_rows, entry = finfo[fpath]  # file open paid in the walk
-                os.rename(fpath, dst)
-                keys.append(key)
-                self._last_num_rows[key] = n_rows
-                if entry:
-                    self._last_stats[key] = entry
-            new_objs[val_str] = keys
-        shutil.rmtree(staging, ignore_errors=True)
-
+        part = [F.col(self.partition_col)] if self.partition_col else []
+        df = df.repartition(*part, F.col("__bindir"))
+        if sort_col is not None:
+            df = df.sortWithinPartitions(F.col(sort_col).asc())
+        staged = self._stage(df, bin_col="__bindir", expected_rows=expected_rows)
         partitions = {}
         report: dict[str, dict] = {}
         for val_str, keys in m["partitions"].items():
             kept = [k for k in keys if k not in retire_keys]
-            partitions[val_str] = kept + new_objs.get(val_str, [])
+            partitions[val_str] = kept + staged.objs.get(val_str, [])
             report[val_str] = {
                 "before": len(keys),
                 "after": len(partitions[val_str]),
             }
-        live_keys = {k for keys in partitions.values() for k in keys}
-        stats = {
-            k: v
-            for k, v in {
-                **m.get("stats", {}),
-                **getattr(self, "_last_stats", {}),
-            }.items()
-            if k in live_keys
-        }
-        try:
-            self._put_manifest(
-                m["version"] + 1,
-                partitions,
-                m["schema"],
-                stats,
-                num_rows=self._carry_num_rows(m, live_keys),
-            )
-        except ManifestConflictError:
-            shutil.rmtree(
-                os.path.join(self.path, self.DATA_DIR, txn), ignore_errors=True
-            )
-            raise
+        self._commit(m, partitions, m["schema"], staged)
         return report
 
     def compact_clustered(
@@ -1202,14 +1022,13 @@ class ManifestUpsertTable:
         Pure layout: the row multiset is untouched (`latest_state`
         semantics never enter). Loss guard, publish, and the
         create-exclusive manifest PUT crash protocol are shared with
-        compact_with_plan (`_stage_publish_binned`); ALL previous
+        compact_with_plan (`_publish_binned`); ALL previous
         objects retire — this is the full-table clustering pass; run
         the FFD `compact_with_plan` for incremental small-file
         maintenance between clustering passes."""
         from buskafkasparkstreaming_spark.operators.windows_fn import (
             grouped_running_sum,
         )
-        from pyspark.sql.types import StructType
 
         m = self._current_manifest()
         if m is None:
@@ -1222,89 +1041,39 @@ class ManifestUpsertTable:
                 val_str: {"before": 0, "after": 0}
                 for val_str in m["partitions"]
             }
-        nr = m.get("num_rows", {})
-
-        def _rows(key: str) -> int:
-            n = nr.get(key)
-            if n is not None:
-                return int(n)
-            import pyarrow.parquet as pq
-
-            return pq.read_metadata(os.path.join(self.path, key)).num_rows
-
-        expected_rows = sum(_rows(k) for k in all_keys)
-        keymap = self.spark.createDataFrame(
-            [
-                (k, val_str)
-                for val_str, keys in m["partitions"].items()
-                for k in keys
-            ],
-            "__key string, __part string",
-        )
-        schema = StructType.fromJson(m["schema"])
-        if self.partition_col is not None:
-            ptype = schema[self.partition_col].dataType
-            data_schema = StructType(
-                [f for f in schema.fields if f.name != self.partition_col]
-            )
-        else:
-            data_schema = schema
-        paths = [os.path.join(self.path, k) for k in sorted(all_keys)]
-        # localCheckpoint (round-14 optimization): the tagged scan feeds
-        # the cell aggregation (which grouped_running_sum evaluates twice
-        # more: RangePartitioner sample + checkpoint materialization) AND
-        # the final bin-tagging join — without the pin the many-small-
-        # object read runs four times per clustering pass
-        df = (
-            self.spark.read.schema(data_schema)
-            .parquet(*paths)
-            .withColumn(
-                "__key",
-                F.regexp_extract(
-                    F.input_file_name(),
-                    "(" + re.escape(self.DATA_DIR)
-                    + r"/[^/]+/[^/]+\.parquet)$",
-                    1,
-                ),
-            )
-            .join(F.broadcast(keymap), "__key")
-            .localCheckpoint(eager=False)
-        )
-        cells = df.groupBy("__part", cluster_col).agg(
+        expected_rows = sum(self._num_rows(m, k) for k in all_keys)
+        part = [self.partition_col] if self.partition_col else []
+        # localCheckpoint (round-14 optimization): the scan feeds the cell
+        # aggregation (which grouped_running_sum evaluates twice more:
+        # RangePartitioner sample + checkpoint materialization) AND the
+        # final bin-tagging join — without the pin the many-small-object
+        # read runs four times per clustering pass
+        df = self._read_objects(m).localCheckpoint(eager=False)
+        cells = df.groupBy(*part, cluster_col).agg(
             F.count(F.lit(1)).cast("long").alias("__cnt")
         ).withColumn("__run", F.col("__cnt"))
         binned = grouped_running_sum(
-            cells, ["__part"], [F.col(cluster_col).asc()], ["__run"]
+            cells, part, [F.col(cluster_col).asc()], ["__run"]
         ).select(
-            "__part",
-            cluster_col,
+            *[F.col(c).alias(f"__b_{c}") for c in (*part, cluster_col)],
             (
                 (F.col("__run") - F.col("__cnt"))
                 / F.lit(int(budget_rows))
-            ).cast("long").alias("__bin"),
+            ).cast("long").alias("__bindir"),
         )
         # broadcast the bin map (round-14 optimization): it is the
         # per-(partition, distinct value) cell frame — domain-sized, far
         # smaller than the data — and a hash join here would add a full
         # exchange of every row on (part, value) right before the
         # (part, bin) repartition the write needs anyway; broadcasting
-        # leaves exactly ONE data exchange in the rewrite job
-        out = df.join(F.broadcast(binned), ["__part", cluster_col])
-        part_cols = ["__bindir"]
-        if self.partition_col is not None:
-            val = F.when(F.col("__part") == "\0null", F.lit(None)).otherwise(
-                F.col("__part")
-            )
-            out = out.withColumn(self.partition_col, val.cast(ptype))
-            part_cols = [self.partition_col, "__bindir"]
-        out = (
-            out.withColumn("__bindir", F.col("__bin"))
-            .repartition(F.col("__part"), F.col("__bin"))
-            .sortWithinPartitions(F.col(cluster_col).asc())
-            .drop("__key", "__part", "__bin")
+        # leaves exactly ONE data exchange in the rewrite job. The join
+        # is NULL-safe: a NULL partition or cluster value is a cell too.
+        on = [F.col(c).eqNullSafe(F.col(f"__b_{c}")) for c in (*part, cluster_col)]
+        out = df.join(F.broadcast(binned), on).drop(
+            *[f"__b_{c}" for c in (*part, cluster_col)]
         )
-        return self._stage_publish_binned(
-            out, part_cols, m, all_keys, expected_rows, "compact_clustered"
+        return self._publish_binned(
+            out, m, all_keys, expected_rows, sort_col=cluster_col
         )
 
     def vacuum(

@@ -68,23 +68,48 @@ def vehicles_to_envelopes(
     return out
 
 
+def _spool_max_record_id(spool_dir: str) -> int:
+    """Highest `record_id` in any published spool file (0 for an empty
+    spool). Lines that are not envelope JSON carry no id and are skipped —
+    the pipeline quarantines them."""
+    top = 0
+    for name in os.listdir(spool_dir):
+        if name.startswith(".") or not name.endswith(".jsonl"):
+            continue
+        with open(os.path.join(spool_dir, name), encoding="utf-8") as fh:
+            for line in fh:
+                try:
+                    payload = json.loads(line)["payload"]
+                    images = (payload.get("after"), payload.get("before"))
+                except (ValueError, KeyError, TypeError, AttributeError):
+                    continue
+                for img in images:
+                    if isinstance(img, dict) and isinstance(img.get("record_id"), int):
+                        top = max(top, img["record_id"])
+    return top
+
+
 def poll_to_spool(
     spool_dir: str,
     fetch: Callable[[str], dict] | None = None,
     url: str = DEFAULT_URL,
     interval_s: float = 30.0,
     max_polls: int | None = None,
-    start_record_id: int = 1,
+    start_record_id: int | None = None,
     clock_ms: Callable[[], int] | None = None,
 ) -> Iterator[str]:
     """Poll loop: every `interval_s` (reference: 30 s, nifi-project.xml:1477)
     fetch → envelope-synthesize → atomically publish one JSONL file into the
     spool. Yields each published path (so tests can drive it poll-by-poll
-    with max_polls and a fake clock)."""
+    with max_polls and a fake clock).
+
+    Without `start_record_id`, ids continue after the highest `record_id`
+    already in the spool, so a restarted poller never reuses a key (the
+    spool is the durable AUTO_INCREMENT counter); an explicit value wins."""
     fetch = fetch or _requests_fetcher
     clock_ms = clock_ms or (lambda: int(time.time() * 1000))
     os.makedirs(spool_dir, exist_ok=True)
-    rid = start_record_id
+    rid = start_record_id if start_record_id is not None else _spool_max_record_id(spool_dir) + 1
     n = 0
     while max_polls is None or n < max_polls:
         body = fetch(url)

@@ -13,6 +13,8 @@ merge underneath (same batch replayed → same table state).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -32,17 +34,32 @@ def run_cdc_pipeline(
 ) -> StreamingQuery:
     """Start the stream. With `available_now` (the test/replay mode) the
     query drains all pending input then stops — the engine's analog of the
-    reference's continuous ASAP-trigger run (:183, no trigger set)."""
+    reference's continuous ASAP-trigger run (:183, no trigger set).
+
+    Corrupt lines land under `quarantine_path/batch_id=<n>/`, so
+    `spark.read.parquet(quarantine_path)` reads them all, with the batch id
+    as a column."""
     parsed = parse_envelopes(value_stream, row_schema=row_schema)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Mirrors the reference's write_batch(df, epochId) (:278-282), with
-        # op routing + quarantine the reference lacked.
-        upserts, deletes, corrupt = route_ops(batch_df)
-        if quarantine_path is not None:
-            corrupt.select("_corrupt").write.mode("append").parquet(quarantine_path)
-        changes = upserts.unionByName(deletes)
-        table.merge(changes, delete_col="_is_delete")
+        # op routing + quarantine the reference lacked. The batch feeds the
+        # quarantine write, the touched-partition collect and the merge:
+        # persisted, the source is read and parsed once, not per action.
+        batch_df.persist()
+        try:
+            upserts, deletes, corrupt = route_ops(batch_df)
+            if quarantine_path is not None:
+                # keyed by batch id and overwritten: a batch replayed after
+                # a crash before its checkpoint commit rewrites its own
+                # corrupt rows instead of appending them a second time
+                corrupt.select("_corrupt").write.mode("overwrite").parquet(
+                    os.path.join(quarantine_path, f"batch_id={batch_id}")
+                )
+            changes = upserts.unionByName(deletes)
+            table.merge(changes, delete_col="_is_delete")
+        finally:
+            batch_df.unpersist()
 
     writer = (
         parsed.writeStream.queryName(query_name)

@@ -510,7 +510,11 @@ def main() -> None:
         "exact protocol (write-once `data/<txn>/` objects, `_manifests/<n>.json`",
         "pointer reads, deferred-GC `vacuum`), locally emulated and tested in",
         "`tests/test_manifest_table.py` — crash-before-PUT leaves the old state",
-        "readable and only unreferenced keys behind.",
+        "readable and only unreferenced keys behind. Every object carries its",
+        "partition column (as Iceberg data files do for identity partitions), so",
+        "a read is one plain parquet scan of the keys the manifest selects:",
+        "partition pruning is manifest key selection, and an object the manifest",
+        "does not mark as holding the column fails the read.",
         "",
     ]
     with open(os.path.join(os.path.dirname(__file__), "..", "SCALE.md"), "w") as fh:

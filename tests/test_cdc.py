@@ -491,3 +491,63 @@ def test_purge_keys_physical_erasure(spark, tmp_path):
     # purging an absent key: no-op, 0 deleted, state unchanged
     assert table.purge_keys(spark.createDataFrame([(99,)], "k int")) == 0
     assert {r["k"] for r in table.read().collect()} == {2, 3}
+
+
+def _drain(spark, spool, table, tmp_path):
+    q = run_cdc_pipeline(
+        stream_envelope_jsonl(spark, spool, max_files_per_trigger=1),
+        table,
+        str(tmp_path / "ckpt"),
+        row_schema=BUS_STATUS_SCHEMA,
+        quarantine_path=str(tmp_path / "quar"),
+    )
+    q.awaitTermination()
+    assert q.exception() is None
+    return q
+
+
+def _route_table(spark, tmp_path):
+    return UpsertTable(
+        spark,
+        str(tmp_path / "tbl"),
+        key_cols="record_id",
+        precombine_col="event_time",
+        partition_col="routeId",
+    )
+
+
+def test_pipeline_reads_each_batch_once(spark, tmp_path):
+    """The batch callback runs several actions (quarantine write,
+    touched-partition collect, merge read and write) but reads and
+    parses its micro-batch once: Σ numInputRows over a two-file drain
+    equals the spool's line count."""
+    d = tmp_path / "spool"
+    d.mkdir()
+    write_jsonl(d / "a.jsonl", FIXTURE[:3], corrupt=True)
+    write_jsonl(d / "b.jsonl", FIXTURE[3:])
+    os.utime(d / "a.jsonl", (1_000_000, 1_000_000))  # drain order a, b
+    os.utime(d / "b.jsonl", (1_000_060, 1_000_060))
+    q = _drain(spark, str(d), _route_table(spark, tmp_path), tmp_path)
+    rows = [p["numInputRows"] for p in q.recentProgress]
+    assert sum(rows) == len(FIXTURE) + 1, rows
+    assert sorted(r for r in rows if r) == [3, 4]
+
+
+def test_quarantine_replay_is_idempotent(spark, spool, tmp_path):
+    """A batch replayed after a crash between its quarantine write and its
+    checkpoint commit rewrites its own corrupt rows: the quarantine count
+    is unchanged, like the table state beside it."""
+    table = _route_table(spark, tmp_path)
+    _drain(spark, spool, table, tmp_path)
+    quar = str(tmp_path / "quar")
+    assert spark.read.parquet(quar).count() == 1
+    state = {r["record_id"]: r["kph"] for r in table.read().collect()}
+
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if (commits / name).exists():
+            (commits / name).unlink()
+    _drain(spark, spool, table, tmp_path)
+    assert spark.read.parquet(quar).count() == 1
+    assert {r["record_id"]: r["kph"] for r in table.read().collect()} == state

@@ -845,3 +845,110 @@ def test_manifest_entries_layout_independent_of_session_shuffle_width(spark):
         ), row
     finally:
         spark.conf.set(conf_key, prev)
+
+
+def _merge_small_objects(spark, t, df):
+    # AQE off: the staged write emits one object per shuffle partition,
+    # so every partition holds several small objects to compact
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        t.merge(df)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_manifest_objects_carry_partition_column(spark, tmp_path):
+    """Every writer — merge, compact_with_plan, compact, compact_clustered
+    — publishes objects whose own footer schema holds the partition
+    column, escaped and NULL partition values included, and marks each
+    object for it in the manifest; the table reads back unchanged."""
+    import pyarrow.parquet as pq
+
+    t = ManifestUpsertTable(
+        spark,
+        str(tmp_path / "tbl"),
+        key_cols="k",
+        precombine_col="et",
+        partition_col="route",
+        stats_cols=["v"],
+    )
+    schema = "k int, v int, route string, et int"
+    routes = ("bus:510", "a/b c", None)
+    # NULL v rows: compact_clustered bins NULL cluster values too
+    rows = [(i, None if i % 5 == 0 else i % 7, routes[i % 3], 100) for i in range(30)]
+    want = {(k, v, r) for k, v, r, _et in rows}
+
+    def check():
+        m = t._current_manifest()
+        assert set(m["partitions"]) == {"bus:510", "a/b c", "\0null"}
+        for keys in m["partitions"].values():
+            for key in keys:
+                footer = pq.read_schema(os.path.join(t.path, key))
+                assert "route" in footer.names, key
+                assert m["stats"][key]["__pcol"] is True
+        assert {(r.k, r.v, r.route) for r in t.read().collect()} == want
+
+    _merge_small_objects(spark, t, spark.createDataFrame(rows, schema))
+    check()
+    report = t.compact_with_plan(budget_rows=6)
+    assert any(r["after"] < r["before"] for r in report.values())
+    check()
+    more = [(100 + i, i % 7, routes[i % 3], 100) for i in range(12)]
+    want |= {(k, v, r) for k, v, r, _et in more}
+    _merge_small_objects(spark, t, spark.createDataFrame(more, schema))
+    check()
+    assert t.compact(max_objects_per_partition=1)
+    check()
+    t.compact_clustered("v", budget_rows=4)
+    check()
+
+
+def test_manifest_read_is_one_plain_scan(spark, tmp_path):
+    """read() is a plain parquet scan of the manifest's keys: the
+    optimized plan holds no join and no input_file_name tagging."""
+    t = _table(spark, tmp_path)
+    t.merge(
+        spark.createDataFrame(
+            [(1, 10, 0, 100), (2, 20, 1, 100)], "k int, v int, p int, et int"
+        )
+    )
+    plan = t.read()._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "input_file_name" not in plan, plan
+    assert _state(t) == {(1, 10, 0), (2, 20, 1)}
+
+
+def test_manifest_object_without_partition_marker_raises(spark, tmp_path):
+    """A manifest key without the partition-column marker (an object
+    published before objects kept the column) fails the read loudly,
+    naming the key — decided from the manifest alone, before any object
+    is opened."""
+    import json as _json
+
+    import pytest
+
+    t = _table(spark, tmp_path, stats_cols=["v"])
+    t.merge(
+        spark.createDataFrame(
+            [(1, 10, 0, 100), (2, 20, 1, 100)], "k int, v int, p int, et int"
+        )
+    )
+    d = t._manifest_dir()
+    p = os.path.join(d, sorted(os.listdir(d))[-1])
+    with open(p, encoding="utf-8") as fh:
+        body = _json.load(fh)
+    old_key = body["partitions"]["1"][0]
+    del body["stats"][old_key]["__pcol"]
+    with open(p, "w", encoding="utf-8") as fh:
+        _json.dump(body, fh)
+    # the object itself is gone: only the manifest can raise the error
+    os.remove(os.path.join(t.path, old_key))
+    with pytest.raises(ValueError, match=old_key):
+        t.read()
+    # a merge into that partition reads it back and refuses the same way
+    with pytest.raises(ValueError, match=old_key):
+        t.merge(
+            spark.createDataFrame([(3, 30, 1, 100)], "k int, v int, p int, et int")
+        )
+    # a read whose zone maps skip the unmarked object still works
+    assert {r.k for r in t.read_where("v", 0, 15).collect()} == {1}

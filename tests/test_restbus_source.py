@@ -161,3 +161,33 @@ def test_datasource_to_upsert_pipeline(spark, tmp_path):
     state = {r["id"]: r["event_time"] for r in table.read().collect()}
     assert len(state) == 3  # one row per vehicle, not per poll
     assert all(v == 1_700_000_030_000 for v in state.values()), state
+
+
+def test_restarted_poller_resumes_record_ids(tmp_path):
+    """A restarted poller continues after the spool's highest record_id
+    instead of reusing keys the keyed upsert would overwrite; an
+    explicit start_record_id still wins."""
+    spool = str(tmp_path / "spool")
+    _publish(spool, polls=1, n_vehicles=2, start_ms=1_700_000_000_000)
+    _publish(spool, polls=1, n_vehicles=2, start_ms=1_700_000_030_000)
+
+    def ids():
+        out = []
+        for name in sorted(os.listdir(spool)):
+            with open(os.path.join(spool, name), encoding="utf-8") as fh:
+                out += [json.loads(line)["payload"]["after"]["record_id"] for line in fh]
+        return sorted(out)
+
+    assert ids() == [1, 2, 3, 4]
+    clock = iter([1_700_000_060_000])
+    list(
+        poll_to_spool(
+            spool,
+            fetch=_fake_fetch(1),
+            interval_s=0.0,
+            max_polls=1,
+            start_record_id=1,
+            clock_ms=lambda: next(clock),
+        )
+    )
+    assert ids() == [1, 1, 2, 3, 4]
