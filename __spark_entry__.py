@@ -104,11 +104,16 @@ def _parallel_builds(*thunks):
     its RangePartitioner sample + bounded offset collect). Inputs the
     thunks share must be EAGERLY materialized first (a lazy checkpoint
     raced from two threads computes twice). Returns results in thunk
-    order; any thunk's exception propagates."""
+    order; any thunk's exception propagates. Each thunk inherits the
+    caller's local properties (job group, description, scheduler pool)
+    and session tags, so its jobs are tagged like the caller's own."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]
 
 

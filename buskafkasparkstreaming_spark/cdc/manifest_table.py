@@ -107,23 +107,26 @@ class ManifestUpsertTable:
         #: stats, the Delta/Iceberg pattern)
         self.stats_cols = stats_cols or []
         #: when set, a per-object BLOOM FILTER over this column is built
-        #: at publish and persisted in the manifest beside the zone maps
-        #: — the Hudi bloom-index analog (the reference deployment is
-        #: Hudi, whose default record index is exactly this:
-        #: 01-setup-ec-vm.md:273): point lookups skip every object whose
-        #: bloom excludes all probe values (zone maps skip RANGES; the
-        #: bloom skips POINT sets a range cannot bound). Bit positions
-        #: are md5-derived from the value's STRING form — deterministic
-        #: and replayable in both engines (Spark conv(substr(md5(..)))
-        #: and DuckDB digit math produce the same integers), which is
-        #: what lets the manifest_bloom_lookup entry's oracle recompute
-        #: bloom membership — false positives included — entirely in
-        #: SQL. m is bits per object (8192 = 1 KiB), k the hash count;
-        #: at ~budget_rows=1000 keys/object the fill is ~0.4 and the FP
-        #: rate ~(0.4)^4 ≈ 2.4% — tune m upward for bigger objects.
+        #: at publish, in the same driver-side footer pass that lifts the
+        #: zone maps (`_object_info_many`), and persisted in the manifest
+        #: beside them — the Hudi bloom-index analog (the reference
+        #: deployment is Hudi, whose default record index is exactly
+        #: this: 01-setup-ec-vm.md:273): point lookups skip every object
+        #: whose bloom excludes all probe values (zone maps skip RANGES;
+        #: the bloom skips POINT sets a range cannot bound). Bit positions
+        #: are md5-derived from the value's Python str() form; for integer
+        #: and string keys that equals Spark's CAST AS STRING and DuckDB's
+        #: CAST AS VARCHAR, which is what lets the manifest_bloom_lookup
+        #: entry's oracle recompute bloom membership — false positives
+        #: included — entirely in SQL. m is bits per object (8192 =
+        #: 1 KiB), k the hash count (at most 4, the md5 digest's 32-bit
+        #: words); at ~budget_rows=1000 keys/object the fill is ~0.4 and
+        #: the FP rate ~(0.4)^4 ≈ 2.4% — tune m upward for bigger objects.
         self.bloom_col = bloom_col
         self.bloom_m = int(bloom_m)
         self.bloom_k = int(bloom_k)
+        if not 1 <= self.bloom_k <= 4:
+            raise ValueError(f"bloom_k must be 1..4 (md5 words), got {bloom_k}")
 
     # -- manifest resolution -------------------------------------------------
     def _manifest_dir(self) -> str:
@@ -291,172 +294,32 @@ class ManifestUpsertTable:
     def _object_info(self, path: str) -> tuple[int, dict]:
         """Everything the manifest needs for one object — num_rows,
         zone-map stats, and (when bloom_col is set) the per-object bloom
-        — from ONE file open (round-14 optimization: the publish paths
-        previously parsed the footer for num_rows, again for stats, and
-        a third time inside the bloom's column read; a commit touches
-        many small objects, so the opens dominate). The ParquetFile is a
-        context manager, so no fd outlives the call (the ADVICE-r13
-        discipline, kept under the single-open form)."""
+        — from ONE file open: the footer gives num_rows and the zone maps,
+        and the bloom column is the only data read. The ParquetFile is a
+        context manager, so no fd outlives the call."""
         import pyarrow.parquet as pq
 
         with pq.ParquetFile(path) as pf:
             md = pf.metadata
-            n_rows = md.num_rows
-            entry: dict = {}
-            if self.stats_cols:
-                entry.update(self._stats_from_md(md, self.stats_cols))
+            entry = self._stats_from_md(md, self.stats_cols) if self.stats_cols else {}
             if self.bloom_col is not None:
-                vals = pf.read(columns=[self.bloom_col])[
-                    self.bloom_col
-                ].to_pylist()
+                vals = pf.read(columns=[self.bloom_col])[self.bloom_col].to_pylist()
                 entry["__bloom"] = self._bloom_from_values(vals)
-        return n_rows, entry
-
-    def _object_meta(self, path: str) -> tuple[int, dict]:
-        """(num_rows, zone-map stats) for one object from a METADATA-ONLY
-        footer read (read_metadata never touches data pages; no fd
-        outlives the call). The bloom — the only piece that needs data
-        pages — is computed separately (`_bloom_spark_positions`)."""
-        import pyarrow.parquet as pq
-
-        md = pq.read_metadata(path)
-        entry: dict = {}
-        if self.stats_cols:
-            entry.update(self._stats_from_md(md, self.stats_cols))
         return md.num_rows, entry
 
-    #: Spark-side bloom extraction is only valid for column types whose
-    #: Python str() equals Spark's CAST(.. AS STRING) rendering — the
-    #: md5 contract `_bloom_positions` documents. Integers and strings
-    #: qualify; bool ('True' vs 'true'), floats ('1e+20' vs '1.0E20'),
-    #: dates/timestamps do not and fall back to the driver-side read.
-    _BLOOM_RENDER_STABLE = (
-        "tinyint", "smallint", "int", "bigint", "string",
-    )
-    #: the same acceptance set keyed by pyarrow type name (the footer
-    #: probe `_bloom_spark_positions` reads), mapped to the Spark read
-    #: schema string; anything else falls back to the driver path
-    _ARROW_BLOOM_TYPES = {
-        "int8": "tinyint",
-        "int16": "smallint",
-        "int32": "int",
-        "int64": "bigint",
-        "string": "string",
-        "large_string": "string",
-    }
-
-    def _bloom_spark_positions(
-        self, paths: list[str]
-    ) -> dict[str, list[int]] | None:
-        """Per-object DISTINCT bloom bit positions computed in ONE
-        distributed Spark pass over the staged/published objects
-        (round-15 optimization, guide §5/§6: the driver previously read
-        the FULL bloom column of every object and md5-hashed each value
-        in Python — thread-pooled, but still the publish bottleneck and
-        a real scale-killer for a 100 TB commit). The job scans only the
-        bloom column, computes the k md5-slice positions row-locally in
-        the JVM (`conv(substr(md5(cast(v as string)), 8j+1, 8), 16, 10)
-        % m` — the exact arithmetic the oracle replays in SQL, so
-        bit-identical to `_bloom_positions`), and aggregates
-        `collect_set(position)` per input file — bounded by m distinct
-        positions per object. Returns None when the column's type does
-        not render identically in Python str() and Spark CAST AS STRING
-        (caller falls back to the driver-side path)."""
-        from urllib.parse import unquote, urlparse
-
-        import pyarrow.parquet as pq
-
-        # ONE metadata-only footer read supplies the bloom column's type
-        # (round-15, guide §6: `spark.read.parquet` without a schema ran
-        # a schema-INFERENCE job over every staged file before the real
-        # pass — a whole extra Spark job per publish); the explicit
-        # 1-column schema also guarantees the scan reads nothing but the
-        # bloom column. Staged objects share one writer schema; a column
-        # absent from the probed footer falls back to the driver path,
-        # which is always correct.
-        try:
-            fschema = pq.read_schema(paths[0])
-        except Exception:
-            return None
-        if self.bloom_col not in fschema.names:
-            return None
-        stype = self._ARROW_BLOOM_TYPES.get(
-            str(fschema.field(self.bloom_col).type)
-        )
-        if stype is None:
-            return None
-        sdf = self.spark.read.schema(
-            f"`{self.bloom_col}` {stype}"
-        ).parquet(*paths)
-        hx = F.md5(F.col(self.bloom_col).cast("string"))
-        pos = F.array(
-            *[
-                F.conv(F.substring(hx, 8 * j + 1, 8), 16, 10).cast("long")
-                % F.lit(self.bloom_m)
-                for j in range(self.bloom_k)
-            ]
-        )
-        rows = (
-            sdf.filter(F.col(self.bloom_col).isNotNull())
-            .select(
-                F.input_file_name().alias("__f"),
-                F.explode(pos).alias("__p"),
-            )
-            .groupBy("__f")
-            .agg(F.collect_set("__p").alias("__ps"))
-            .collect()
-        )
-        by_path = {
-            unquote(urlparse(r["__f"]).path): [int(p) for p in r["__ps"]]
-            for r in rows
-        }
-        # an object absent from the aggregate held no non-NULL bloom
-        # values — its bloom is the all-zero bitmap, same as the driver
-        # path's empty-values fold
-        return {p: by_path.get(os.path.abspath(p), []) for p in paths}
-
-    def _bloom_from_positions(self, positions) -> dict:
-        import base64
-
-        bits = bytearray(self.bloom_m // 8)
-        for p in positions:
-            bits[p >> 3] |= 1 << (p & 7)
-        return {
-            "m": self.bloom_m,
-            "k": self.bloom_k,
-            "b64": base64.b64encode(bytes(bits)).decode("ascii"),
-        }
-
     def _object_info_many(self, paths: list[str]) -> dict[str, tuple[int, dict]]:
-        """Everything the manifest needs for many objects: metadata-only
-        footer reads (num_rows + zone maps) through a small thread pool
-        (round-14: pyarrow releases the GIL; eight threads cut the
-        multi-hundred-object decay-mode commits ~5x), plus — when a bloom
-        column is configured — the per-object blooms from ONE distributed
-        Spark pass (round-15, `_bloom_spark_positions`) instead of a
-        full driver-side column read per object. Types whose string
-        rendering is not Spark/Python-stable keep the driver path.
-        Results are keyed by path — ordering plays no role."""
+        """`_object_info` for many objects through a small thread pool
+        (pyarrow releases the GIL while it opens and decodes; a commit
+        touches many small objects, so the opens dominate). No Spark job:
+        at every measured commit size this driver fold beats a
+        distributed pass over the staged objects (SCALE.md, bloom
+        section). Results are keyed by path — ordering plays no role."""
         from concurrent.futures import ThreadPoolExecutor
 
         if not paths:
             return {}
-        positions = (
-            self._bloom_spark_positions(paths)
-            if self.bloom_col is not None
-            else None
-        )
-        if self.bloom_col is not None and positions is None:
-            # render-unstable bloom type: one open per object serving
-            # num_rows, stats AND the bloom column (the round-14 path)
-            with ThreadPoolExecutor(max_workers=min(8, len(paths))) as pool:
-                return dict(zip(paths, pool.map(self._object_info, paths)))
         with ThreadPoolExecutor(max_workers=min(8, len(paths))) as pool:
-            out = dict(zip(paths, pool.map(self._object_meta, paths)))
-        if positions is not None:
-            for p, (_n, entry) in out.items():
-                entry["__bloom"] = self._bloom_from_positions(positions[p])
-        return out
+            return dict(zip(paths, pool.map(self._object_info, paths)))
 
     @staticmethod
     def _stats_from_md(md, cols: list[str]) -> dict:
@@ -505,9 +368,10 @@ class ManifestUpsertTable:
         loss guard): otherwise staging is removed and the call raises
         before anything is published.
 
-        num_rows, zone maps and blooms come from one footer pass over the
-        staged files (`_object_info_many`); every object of a partitioned
-        table also gets the `__pcol` marker the reader checks."""
+        num_rows, zone maps and blooms come from one driver-side pass that
+        opens each staged file once (`_object_info_many`; no Spark job);
+        every object of a partitioned table also gets the `__pcol` marker
+        the reader checks."""
         part_cols = [bin_col] if bin_col is not None else []
         if self.partition_col is not None:
             df = df.withColumn(self.PDIR, F.col(self.partition_col))
@@ -594,12 +458,32 @@ class ManifestUpsertTable:
         ]
 
     def _bloom_from_values(self, vals) -> dict:
-        return self._bloom_from_positions(
-            p
+        """The bloom of one object over its non-NULL `vals`: each value is
+        hashed once, and the k positions and the bitmap are derived with
+        numpy — bit-identical to setting `bits[p >> 3] |= 1 << (p & 7)`
+        for every `_bloom_positions` position (the probe path)."""
+        import base64
+        import hashlib
+
+        import numpy as np
+
+        digests = b"".join(
+            hashlib.md5(str(v).encode("utf-8")).digest()
             for v in vals
             if v is not None
-            for p in self._bloom_positions(v, self.bloom_m, self.bloom_k)
         )
+        # the md5 digest's four big-endian 32-bit words are the integers
+        # of its four 8-hex-digit slices
+        words = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
+        bits = np.zeros(self.bloom_m, dtype=bool)
+        bits[words[:, : self.bloom_k] % self.bloom_m] = True
+        return {
+            "m": self.bloom_m,
+            "k": self.bloom_k,
+            "b64": base64.b64encode(
+                np.packbits(bits, bitorder="little").tobytes()
+            ).decode("ascii"),
+        }
 
     @staticmethod
     def _bloom_may_contain(bloom: dict, positions: list[int]) -> bool:
@@ -729,7 +613,10 @@ class ManifestUpsertTable:
                     raise
 
     def _merge_once(self, batch: DataFrame, delete_col: str | None) -> None:
-        data_cols = [c for c in batch.columns if not c.startswith("_")]
+        # the delete flag steers the merge and is never stored, whatever its name
+        data_cols = [
+            c for c in batch.columns if not c.startswith("_") and c != delete_col
+        ]
         required = {*self.key_cols, self.precombine_col} | (
             {self.partition_col} if self.partition_col else set()
         )

@@ -365,7 +365,10 @@ class UpsertTable:
         scan), unions with the batch at a higher precombine epoch, dedups,
         and dynamically overwrites just those partitions.
         """
-        data_cols = [c for c in batch.columns if not c.startswith("_")]
+        # the delete flag steers the merge and is never stored, whatever its name
+        data_cols = [
+            c for c in batch.columns if not c.startswith("_") and c != delete_col
+        ]
         required = {*self.key_cols, self.precombine_col} | (
             {self.partition_col} if self.partition_col else set()
         )

@@ -12,15 +12,22 @@ published poll file, and resumes exactly from the committed offset across
 restarts, which is the Kafka-like contract (S4) the file-glob source only
 approximates with its own listing state. It also demonstrates the engine
 can host third-party sources: the same class shape with a `requests`-based
-`latestOffset` (poll counter) and `read` (GET + parse) is the live-HTTP
+`latestOffset` (poll counter) and `read` (GET) is the live-HTTP
 variant; the spool indirection exists because the build sandbox has no
 network (the reference's own poller is NiFi config, 30 s timer).
 
+Each row is one raw spool line in a `value` string column — the Kafka
+contract — so callers parse and route it with `cdc.envelope.parse_envelopes`
+/ `route_ops`, exactly as they parse a Kafka topic or the JSONL file source:
+one parser, one corrupt-record policy (a malformed line becomes a `_corrupt`
+row for the quarantine, never a silent skip). Blank lines are not messages
+and are not emitted.
+
 Scale shape: the poll stream is single-endpoint (reference: one route) —
 volume is bounded by poll rate, not corpus size; per-file partitions give
-the same parallelism as Kafka partition splits. Parsing is per-row Python,
-acceptable at ingest-edge volume (a 30 s tick of vehicle rows); the heavy
-lifting stays in the downstream JVM pipeline, exactly as in the reference.
+the same parallelism as Kafka partition splits. The source only splits
+lines; parsing is the JVM's from_json downstream, exactly as in the
+reference.
 
 Offsets are JSON dicts {"index": n} where n counts spool files in
 lexicographic filename order; `poll-<epoch_ms>-<uuid>.jsonl` names make
@@ -29,7 +36,6 @@ that order the publish order (13-digit ms keeps lexicographic = numeric).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -38,36 +44,10 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
-#: flattened `payload.after` image + op — the reference's bus_status row
-#: (bus_status_schema.json:1; MySQL DDL 01-setup-ec-vm.md:320-333)
-VEHICLE_ROW_SCHEMA = StructType(
-    [
-        StructField("record_id", IntegerType()),
-        StructField("id", IntegerType()),
-        StructField("routeId", IntegerType()),
-        StructField("directionId", StringType()),
-        StructField("predictable", IntegerType()),
-        StructField("secsSinceReport", IntegerType()),
-        StructField("kph", IntegerType()),
-        StructField("heading", IntegerType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("leadingVehicleId", IntegerType()),
-        StructField("event_time", LongType()),
-        StructField("op", StringType()),
-    ]
-)
-
-_FIELDS = [f.name for f in VEHICLE_ROW_SCHEMA.fields]
+#: one raw spool line per row, the Kafka `value` contract
+VALUE_SCHEMA = StructType([StructField("value", StringType())])
 
 
 def _spool_files(path: str) -> list[str]:
@@ -79,24 +59,13 @@ def _spool_files(path: str) -> list[str]:
     )
 
 
-def _parse_file(path: str):
-    """One spool file → row tuples in schema order. Malformed lines are
-    skipped (the PERMISSIVE contract of the downstream envelope parser —
-    quarantine happens there; the source must never kill the stream)."""
+def _read_lines(path: str):
+    """One spool file → `(line,)` rows, one per non-blank line, unparsed."""
     with open(path, encoding="utf-8") as fh:
         for line in fh:
             line = line.strip()
-            if not line:
-                continue
-            try:
-                env = json.loads(line)
-            except ValueError:
-                continue
-            payload = env.get("payload") or {}
-            after = payload.get("after") or {}
-            row = {k: after.get(k) for k in _FIELDS}
-            row["op"] = payload.get("op")
-            yield tuple(row[k] for k in _FIELDS)
+            if line:
+                yield (line,)
 
 
 class _FilePartition(InputPartition):
@@ -121,7 +90,7 @@ class RestBusSpoolBatchReader(DataSourceReader):
     def read(self, partition: _FilePartition):
         if not partition.path:
             return iter(())
-        return _parse_file(partition.path)
+        return _read_lines(partition.path)
 
 
 class RestBusSpoolStreamReader(DataSourceStreamReader):
@@ -146,7 +115,7 @@ class RestBusSpoolStreamReader(DataSourceStreamReader):
         return [_FilePartition(os.path.join(self.path, f)) for f in files]
 
     def read(self, partition: _FilePartition):
-        return _parse_file(partition.path)
+        return _read_lines(partition.path)
 
     def commit(self, end):
         # spool files are immutable once published; nothing to ack —
@@ -160,7 +129,7 @@ class RestBusSpoolDataSource(DataSource):
         return "restbus_spool"
 
     def schema(self):
-        return VEHICLE_ROW_SCHEMA
+        return VALUE_SCHEMA
 
     def reader(self, schema):
         return RestBusSpoolBatchReader(self.options)

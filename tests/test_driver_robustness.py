@@ -1664,3 +1664,22 @@ def test_money_magnitude_drift(spark, tmp_path):
             failures.append(f"{name}: {str(e)[:300]}")
     con.close()
     assert not failures, "\n".join(failures)
+
+
+def test_parallel_builds_keep_the_callers_job_group(spark):
+    """Jobs run on `_parallel_builds`' pool threads carry the calling
+    thread's job group (and so its job tags): none escapes a tagged run."""
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    group = "bss-parallel-builds"
+    sc.setJobGroup(group, "parallel builds")
+    try:
+        counts = entrymod._parallel_builds(
+            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2

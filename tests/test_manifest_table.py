@@ -7,9 +7,11 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
+from buskafkasparkstreaming_spark.cdc.upsert import UpsertTable
 
 
 def _table(spark, tmp_path, **kw):
@@ -753,15 +755,15 @@ def test_manifest_bloom_index_point_lookup(spark, tmp_path):
     del n_objects  # silences linters; count asserted via skips above
 
 
-def test_bloom_spark_positions_bit_identical_to_driver_path(
-    spark, tmp_path
-):
-    """Round-15 distributed publish: the Spark-side bloom extraction
-    (md5-slice positions computed in the JVM, collect_set per file) must
-    produce BIT-IDENTICAL bitmaps to the driver-side column read + Python
-    md5 fold, for int AND string bloom columns, NULLs skipped, empty
-    files all-zero — and must decline (None) for a render-unstable type
-    (bool: Python 'True' vs Spark 'true') so the caller falls back."""
+def test_object_info_many_blooms_match_scalar_fold(spark, tmp_path):
+    """The staged-object pass builds every bloom bit-identical to folding
+    the scalar `_bloom_positions` (the probe path, which the oracle
+    replays in SQL) over str(v): int keys with NULLs and negatives,
+    non-ASCII strings and bools; an empty or all-NULL object gets the
+    all-zero bitmap. num_rows and zone maps come from the same open, and
+    the pass runs no Spark job."""
+    import base64
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -770,54 +772,76 @@ def test_bloom_spark_positions_bit_identical_to_driver_path(
         str(tmp_path / "tbl"),
         key_cols="k",
         precombine_col="et",
+        stats_cols=["k"],
         bloom_col="k",
-    )
-    p_int = str(tmp_path / "ints.parquet")
-    p_int2 = str(tmp_path / "ints2.parquet")
-    pq.write_table(
-        pa.table({"k": pa.array([1, 2, None, 40, -7], type=pa.int64())}),
-        p_int,
-    )
-    pq.write_table(pa.table({"k": pa.array([], type=pa.int64())}), p_int2)
-    pos = t._bloom_spark_positions([p_int, p_int2])
-    assert pos is not None and set(pos) == {p_int, p_int2}
-    want = t._bloom_from_values([1, 2, None, 40, -7])
-    assert t._bloom_from_positions(pos[p_int]) == want
-    assert t._bloom_from_positions(pos[p_int2]) == t._bloom_from_values([])
-
-    ts = ManifestUpsertTable(
-        spark,
-        str(tmp_path / "tbl_s"),
-        key_cols="k",
-        precombine_col="et",
-        bloom_col="k",
-    )
-    p_str = str(tmp_path / "strs.parquet")
-    pq.write_table(
-        pa.table({"k": pa.array(["a", "bb 7", None, ""], type=pa.string())}),
-        p_str,
-    )
-    pos_s = ts._bloom_spark_positions([p_str])
-    assert ts._bloom_from_positions(pos_s[p_str]) == ts._bloom_from_values(
-        ["a", "bb 7", None, ""]
     )
 
-    tb = ManifestUpsertTable(
-        spark,
-        str(tmp_path / "tbl_b"),
-        key_cols="k",
-        precombine_col="et",
-        bloom_col="k",
+    def scalar_fold(vals):
+        bits = bytearray(t.bloom_m // 8)
+        for v in vals:
+            if v is not None:
+                for p in t._bloom_positions(v, t.bloom_m, t.bloom_k):
+                    bits[p >> 3] |= 1 << (p & 7)
+        return base64.b64encode(bytes(bits)).decode("ascii")
+
+    objects = {
+        "ints": pa.array([1, 2, None, 40, -7, 2**31 - 1], type=pa.int32()),
+        "longs": pa.array([-(2**40), 0, None], type=pa.int64()),
+        "empty": pa.array([], type=pa.int64()),
+        "strs": pa.array(["a", "bb 7", None, "", "é", "東京", "🚌"], type=pa.string()),
+        "bools": pa.array([True, False, None], type=pa.bool_()),
+        "nulls": pa.array([None, None, None], type=pa.int64()),
+    }
+    paths = {}
+    for name, arr in objects.items():
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"k": arr}), paths[name])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bloom-pass", "staged-object pass")
+    try:
+        info = t._object_info_many(list(paths.values()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("bloom-pass") == []
+
+    assert set(info) == set(paths.values())
+    for name, arr in objects.items():
+        n_rows, entry = info[paths[name]]
+        assert n_rows == len(arr), name
+        bloom = entry["__bloom"]
+        assert (bloom["m"], bloom["k"]) == (t.bloom_m, t.bloom_k)
+        assert bloom["b64"] == scalar_fold(arr.to_pylist()), name
+    zero = base64.b64encode(bytes(t.bloom_m // 8)).decode("ascii")
+    assert info[paths["nulls"]][1]["__bloom"]["b64"] == zero
+    assert info[paths["empty"]][1]["__bloom"]["b64"] == zero
+    assert info[paths["ints"]][1]["k"] == [-7, 2**31 - 1]
+    with pytest.raises(ValueError, match="bloom_k"):
+        ManifestUpsertTable(spark, str(tmp_path / "t5"), "k", "et", bloom_col="k", bloom_k=5)
+    # bools hash their Python form ('True'), the same str() the probe uses
+    assert t.select_objects_bloom(
+        [True], m={"partitions": {"": [paths["bools"]]},
+                   "stats": {paths["bools"]: info[paths["bools"]][1]}}
+    )[0] == [paths["bools"]]
+
+
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_delete_flag_column_is_never_stored(spark, tmp_path, cls):
+    """A delete flag without a leading underscore steers the merge but
+    never becomes a table column, on either commit protocol."""
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et")
+    t.merge(spark.createDataFrame([(1, 1, 100), (2, 2, 100)], "k int, v int, et int"))
+    t.merge(
+        spark.createDataFrame(
+            [(1, 1, 200, True), (2, 2, 200, True)], "k int, v int, et int, del boolean"
+        ),
+        delete_col="del",
     )
-    p_bool = str(tmp_path / "bools.parquet")
-    pq.write_table(
-        pa.table({"k": pa.array([True, False], type=pa.bool_())}), p_bool
-    )
-    assert tb._bloom_spark_positions([p_bool]) is None
-    # and the full publish path still builds the correct bloom for it
-    n_rows, entry = tb._object_info_many([p_bool])[p_bool]
-    assert n_rows == 2
-    assert entry["__bloom"] == tb._bloom_from_values([True, False])
+    t.merge(spark.createDataFrame([(3, 3, 300)], "k int, v int, et int"))
+    out = t.read()
+    assert "del" not in out.columns
+    assert [(r.k, r.v, r.et) for r in out.collect()] == [(3, 3, 300)]
 
 
 def test_manifest_entries_layout_independent_of_session_shuffle_width(spark):

@@ -1,6 +1,7 @@
 """The custom Python DataSource over the RestBus poll spool (S1/S4
 boundary): batch scan, streaming offsets, restart resume, and the
-composition with the http_poller that publishes the spool."""
+composition with the http_poller that publishes the spool. The source
+emits raw `value` lines; every test parses them with `parse_envelopes`."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from buskafkasparkstreaming_spark.cdc.envelope import parse_envelopes, route_ops
 from buskafkasparkstreaming_spark.sources import restbus_source
 from buskafkasparkstreaming_spark.sources.http_poller import poll_to_spool
 
@@ -54,10 +56,12 @@ def test_batch_read_parses_spool(spark, tmp_path):
     spool = str(tmp_path / "spool")
     _publish(spool, polls=2, n_vehicles=3)
     restbus_source.register(spark)
-    df = spark.read.format("restbus_spool").option("path", spool).load()
+    raw = spark.read.format("restbus_spool").option("path", spool).load()
+    assert raw.columns == ["value"]
+    df = parse_envelopes(raw)
     assert df.count() == 6
     r = df.orderBy("record_id").first()
-    assert r["record_id"] == 1 and r["routeId"] == 510 and r["op"] == "c"
+    assert r["record_id"] == 1 and r["routeId"] == 510 and r["_op"] == "c"
     assert abs(r["lat"] - 43.64) < 1e-9
     # per-file partition parallelism: one partition per poll file
     assert df.rdd.getNumPartitions() == 2
@@ -67,7 +71,9 @@ def test_batch_read_empty_spool(spark, tmp_path):
     spool = str(tmp_path / "empty")
     os.makedirs(spool)
     restbus_source.register(spark)
-    df = spark.read.format("restbus_spool").option("path", spool).load()
+    df = parse_envelopes(
+        spark.read.format("restbus_spool").option("path", spool).load()
+    )
     assert df.count() == 0
 
 
@@ -82,9 +88,9 @@ def test_stream_resumes_from_committed_offset(spark, tmp_path):
 
     def drain():
         q = (
-            spark.readStream.format("restbus_spool")
-            .option("path", spool)
-            .load()
+            parse_envelopes(
+                spark.readStream.format("restbus_spool").option("path", spool).load()
+            )
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -105,7 +111,9 @@ def test_stream_resumes_from_committed_offset(spark, tmp_path):
     assert again.filter(F.col("event_time") >= 1_700_000_100_000).count() == 2
 
 
-def test_malformed_lines_are_skipped_not_fatal(spark, tmp_path):
+def test_malformed_line_routes_to_corrupt(spark, tmp_path):
+    """A broken line is a row, not a silent skip: parsed and routed, it
+    lands in the corrupt split beside the good envelope's upsert."""
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
     good = {
@@ -120,11 +128,12 @@ def test_malformed_lines_are_skipped_not_fatal(spark, tmp_path):
     with open(os.path.join(spool, "poll-0000000000001-x.jsonl"), "w") as fh:
         fh.write(json.dumps(good) + "\n")
         fh.write("this is not json {\n")
-        fh.write(json.dumps(good) + "\n")
     restbus_source.register(spark)
-    df = spark.read.format("restbus_spool").option("path", spool).load()
-    assert df.count() == 2
-    assert df.select(F.min("record_id")).first()[0] == 7
+    raw = spark.read.format("restbus_spool").option("path", spool).load()
+    upserts, deletes, corrupt = route_ops(parse_envelopes(raw))
+    assert [r["record_id"] for r in upserts.collect()] == [7]
+    assert deletes.count() == 0
+    assert [r["_corrupt"] for r in corrupt.collect()] == ["this is not json {"]
 
 
 def test_datasource_to_upsert_pipeline(spark, tmp_path):
@@ -146,7 +155,7 @@ def test_datasource_to_upsert_pipeline(spark, tmp_path):
         precombine_col="event_time",
         partition_col="routeId",
     )
-    stream = (
+    stream = parse_envelopes(
         spark.readStream.format("restbus_spool").option("path", spool).load()
     )
     q = (
