@@ -30,10 +30,11 @@ value is re-attached from the manifest. The manifest marks each such object
 (`__pcol` in its stats entry); a read that selects an object without the
 marker — one written before the column was kept in the objects — raises.
 
-Merge semantics (key/partition/precombine, delete tombstones, idempotent
-replay) are identical to `UpsertTable` — both call `latest_state`; only
-the storage protocol differs. Single-writer, like the reference's one
-streaming driver (01-setup-ec-vm.md:284).
+Merge semantics (key/partition/precombine, delete tombstones, schema
+evolution, idempotent replay) are those of `UpsertTable`: both run the one
+merge core, `cdc.upsert.precombine_merge`, and only the read-back of the
+touched partitions and the storage protocol differ. Concurrent writers
+are serialized by the create-exclusive manifest PUT and a retried merge.
 """
 
 from __future__ import annotations
@@ -49,8 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buskafkasparkstreaming_spark.cdc.upsert import (
-    latest_state,
     partition_dirvalue,
+    precombine_merge,
 )
 
 
@@ -227,9 +228,13 @@ class ManifestUpsertTable:
         return self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(*files)
 
     def _empty(self, m: dict) -> DataFrame:
+        """A zero-row frame of `m`'s schema over an RDD of no partitions, so
+        a plan that unions it runs no extra task."""
         from pyspark.sql.types import StructType
 
-        return self.spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), StructType.fromJson(m["schema"])
+        )
 
     def _read_manifest_df(self, m: dict) -> DataFrame:
         out = self._read_objects(m)
@@ -613,66 +618,40 @@ class ManifestUpsertTable:
                     raise
 
     def _merge_once(self, batch: DataFrame, delete_col: str | None) -> None:
-        # the delete flag steers the merge and is never stored, whatever its name
-        data_cols = [
-            c for c in batch.columns if not c.startswith("_") and c != delete_col
-        ]
-        required = {*self.key_cols, self.precombine_col} | (
-            {self.partition_col} if self.partition_col else set()
-        )
-        missing = sorted(required - set(data_cols))
-        if missing:
-            raise ValueError(f"batch is missing required merge columns {missing}")
-        delete_flag = (
-            F.coalesce(F.col(delete_col), F.lit(False))
-            if delete_col is not None and delete_col in batch.columns
-            else F.lit(False)
-        )
-        incoming = batch.select(
-            *data_cols,
-            delete_flag.alias("__deleted"),
-            F.lit(1).alias("__gen"),
-        )
-
+        # one manifest snapshot per attempt: the read-back and the commit
+        # resolve the same version, and a lost version race retries whole
         m = self._current_manifest()
-        touched = {""}  # an unpartitioned table is one partition, key ""
-        if self.partition_col is not None:
-            # CAST(col AS STRING) is the same rendering Spark's
-            # partition-path code uses for the dir name, so these keys
-            # match what _stage recovers (bool -> 'true', big
-            # double -> '1.0E20'); Python str() of the raw value does not.
-            touched = {
-                self._pval(r[0])
-                for r in batch.select(
-                    F.col(self.partition_col).cast("string")
-                )
-                .distinct()
-                .collect()
-            }
-        existing = self._read_objects(m, vals=touched) if m is not None else None
-        if existing is not None:
-            existing = existing.select(
-                *existing.columns,
-                F.lit(False).alias("__deleted"),
-                F.lit(0).alias("__gen"),
-            )
-            incoming = existing.unionByName(incoming, allowMissingColumns=True)
 
-        merged = latest_state(
-            incoming,
+        def read_touched(touched: list | None) -> DataFrame | None:
+            if m is None:
+                return None
+            out = self._read_objects(m, vals=self._touched_keys(touched))
+            # no stored object in the touched partitions: an empty frame of
+            # the stored schema still carries the columns this batch omits
+            return self._empty(m) if out is None else out
+
+        merged, touched = precombine_merge(
+            batch,
             self.key_cols,
             self.precombine_col,
-            tiebreak_cols=[*self.tiebreak_cols, "__gen"],
-            delete_col="__deleted",
-        ).drop("__deleted", "__gen")
-
+            self.partition_col,
+            self.tiebreak_cols,
+            delete_col,
+            read_touched,
+        )
         staged = self._stage(merged)
         partitions = dict(m["partitions"]) if m is not None else {}
-        for val_str in touched:
+        for val_str in self._touched_keys(touched):
             # fully-tombstoned partition: no staged objects -> empty list
             partitions[val_str] = staged.objs.get(val_str, [])
         partitions.update(staged.objs)
         self._commit(m, partitions, merged.schema.jsonValue(), staged)
+
+    def _touched_keys(self, touched: list | None) -> set[str]:
+        """Manifest keys of the touched (raw value, Spark's rendering)
+        pairs `precombine_merge` returns, from the rendering; an
+        unpartitioned table is one partition, key ''."""
+        return {""} if touched is None else {self._pval(s) for _, s in touched}
 
     # -- maintenance ---------------------------------------------------------
     def compact(self, max_objects_per_partition: int = 4) -> list[str]:

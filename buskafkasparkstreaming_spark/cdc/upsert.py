@@ -16,6 +16,9 @@ Spark-first design (SURVEY §2.3, §7 "custom logic"):
   skewed hot partition only pays for the hot partition.
 * deletes     = tombstone rows (op='d') drop the key during precombine.
 
+`precombine_merge` is that merge up to the write, shared by `UpsertTable`
+(rename commit, below) and `ManifestUpsertTable` (manifest commit).
+
 At cluster scale the partition column should be a bounded-cardinality key
 (the reference used routeId); the shuffle is keyed on the record key so AQE
 skew-join/partition-coalescing handles hot keys.
@@ -27,6 +30,7 @@ import json
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -293,6 +297,89 @@ def latest_state(
     return out
 
 
+def _touched_partitions(df: DataFrame, partition_col: str) -> list:
+    """The distinct partitions `df` holds, in one job, as (raw value,
+    Spark's string rendering) pairs. The raw value prunes a typed scan;
+    the rendering is what Spark's partition-path code writes (`CAST AS
+    STRING`: bool 'true', double '1.0E20'), so it names the partition's
+    directory and manifest key. Python str() of the raw value ('True',
+    '1e+20') does not, and an emptied partition's directory was then never
+    found."""
+    p = F.col(partition_col)
+    return df.select(p, p.cast("string")).distinct().collect()
+
+
+def precombine_merge(
+    batch: DataFrame,
+    key_cols: list[str],
+    precombine_col: str,
+    partition_col: str | None,
+    tiebreak_cols: list[str],
+    delete_col: str | None,
+    read_touched: Callable[[list | None], DataFrame | None] | None,
+) -> tuple[DataFrame, list | None]:
+    """The merge both commit protocols run, up to the write: validate
+    `batch`, collect the partitions it touches, union it with the stored
+    rows of those partitions and reduce to the latest row per key.
+
+    `read_touched(touched)` returns the stored rows of the touched
+    partitions (every row when `touched` is None: an unpartitioned table),
+    or None when nothing is stored. Pass `read_touched=None` for a table
+    that does not exist yet; the touched-partition collect is then skipped
+    too. Incoming rows beat stored rows on a full precombine tie (`__gen`
+    1 over 0). The delete flag steers the merge and is never stored,
+    whatever its name; a winning tombstone drops its key.
+
+    Schema evolution (Hudi-style): the merged schema is the union of the
+    stored and the batch's columns. A new column reads as null on stored
+    rows; a batch missing a stored column carries null for it, so a
+    winning incoming row nulls that field (the after-image of a source
+    that dropped the column). Key, precombine and partition columns must
+    be present, so merge semantics never degrade silently.
+
+    Returns the merged rows and the touched partitions as
+    `_touched_partitions` pairs (None when unpartitioned or not collected).
+    """
+    data_cols = [c for c in batch.columns if not c.startswith("_") and c != delete_col]
+    required = {*key_cols, precombine_col} | ({partition_col} if partition_col else set())
+    missing = sorted(required - set(data_cols))
+    if missing:
+        raise ValueError(
+            f"batch is missing required merge columns {missing} "
+            f"(batch columns: {sorted(data_cols)})"
+        )
+    delete_flag = (
+        F.coalesce(F.col(delete_col), F.lit(False))
+        if delete_col is not None and delete_col in batch.columns
+        else F.lit(False)
+    )
+    unioned = batch.select(
+        *data_cols,
+        delete_flag.alias("__deleted"),
+        F.lit(1).alias("__gen"),
+    )
+    touched = None
+    if read_touched is not None:
+        if partition_col is not None:
+            touched = _touched_partitions(batch, partition_col)
+        existing = read_touched(touched)
+        if existing is not None:
+            existing = existing.select(
+                *existing.columns,
+                F.lit(False).alias("__deleted"),
+                F.lit(0).alias("__gen"),
+            )
+            unioned = existing.unionByName(unioned, allowMissingColumns=True)
+    merged = latest_state(
+        unioned,
+        key_cols,
+        precombine_col,
+        tiebreak_cols=[*tiebreak_cols, "__gen"],
+        delete_col="__deleted",
+    ).drop("__deleted", "__gen")
+    return merged, touched
+
+
 class UpsertTable:
     """A partitioned-parquet table with keyed-upsert merge.
 
@@ -362,113 +449,76 @@ class UpsertTable:
         """Upsert `batch` (change rows) into the table.
 
         Reads back only the partitions the batch touches (partition-pruned
-        scan), unions with the batch at a higher precombine epoch, dedups,
-        and dynamically overwrites just those partitions.
+        scan), runs `precombine_merge` and publishes just those partitions
+        (`_publish`).
         """
-        # the delete flag steers the merge and is never stored, whatever its name
-        data_cols = [
-            c for c in batch.columns if not c.startswith("_") and c != delete_col
-        ]
-        required = {*self.key_cols, self.precombine_col} | (
-            {self.partition_col} if self.partition_col else set()
-        )
-        missing = sorted(required - set(data_cols))
-        if missing:
-            raise ValueError(
-                f"batch is missing required merge columns {missing} "
-                f"(batch columns: {sorted(data_cols)})"
-            )
-        delete_flag = (
-            F.coalesce(F.col(delete_col), F.lit(False))
-            if delete_col is not None and delete_col in batch.columns
-            else F.lit(False)
-        )
-        incoming = batch.select(
-            *data_cols,
-            delete_flag.alias("__deleted"),
-            F.lit(1).alias("__gen"),  # incoming beats existing on precombine tie
-        )
-
-        touched: list | None = None
-        if self.exists():
-            # Schema evolution (Hudi-style): the merged schema is the UNION
-            # of the table's and the batch's columns. A batch introducing a
-            # new column null-fills it on stored rows (untouched partitions
-            # read it as null through the sidecar schema — parquet
-            # schema-on-read); a batch missing a table column carries null
-            # for it, and a winning incoming row therefore nulls that field
-            # — the honest after-image semantics for a source that dropped
-            # the column. Keys/precombine/partition must always be present
-            # (validated above), so merge semantics never degrade silently.
-            table_df = self.read()
-            existing = table_df.select(
-                *table_df.columns,
-                F.lit(False).alias("__deleted"),
-                F.lit(0).alias("__gen"),
-            )
-            if self.partition_col is not None:
-                touched = [
-                    r[0]
-                    for r in batch.select(self.partition_col).distinct().collect()
-                ]
-                existing = existing.filter(F.col(self.partition_col).isin(touched))
-            unioned = existing.unionByName(incoming, allowMissingColumns=True)
-        else:
-            unioned = incoming
-
-        merged = latest_state(
-            unioned,
+        merged, touched = precombine_merge(
+            batch,
             self.key_cols,
             self.precombine_col,
-            tiebreak_cols=[*self.tiebreak_cols, "__gen"],
-            delete_col="__deleted",
-        ).drop("__deleted", "__gen")
+            self.partition_col,
+            self.tiebreak_cols,
+            delete_col,
+            read_touched=self._read_touched if self.exists() else None,
+        )
+        self._publish(merged, touched)
+        with open(self._schema_sidecar, "w", encoding="utf-8") as fh:
+            json.dump(merged.schema.jsonValue(), fh)
 
-        # Commit: write the merged partitions into a fresh dot-prefixed
-        # staging directory (invisible to parquet readers — the write
-        # streams FROM the old files TO new ones, so no plan overwrites its
-        # own input, and nothing depends on
-        # spark.sql.sources.partitionOverwriteMode), then publish through
-        # the write-ahead-manifest committer: old entries are renamed aside
-        # to a trash dir, staged entries renamed in, trash deleted LAST —
-        # a crash anywhere is rolled forward from the manifest on the next
-        # read/merge, so no window exists in which prior rows are deleted
-        # but their replacement is not yet in place (ADVICE r2, medium).
+    def _read_touched(self, touched: list | None) -> DataFrame:
+        """Stored rows of the `_touched_partitions` pairs (all rows when
+        None): a typed filter on the raw values, so the scan is
+        partition-pruned. `isin` never matches NULL, so the null partition
+        is matched with IS NULL; missing it read back no stored rows there,
+        and the publish then replaced the partition with the batch alone."""
+        table_df = self.read()
+        if touched is None:
+            return table_df
+        col = F.col(self.partition_col)
+        raws = [raw for raw, _ in touched if raw is not None]
+        cond = col.isin(raws)
+        if len(raws) < len(touched):
+            cond = cond | col.isNull()
+        return table_df.filter(cond)
+
+    def _publish(self, df: DataFrame, touched: list | None) -> list[str]:
+        """Write `df` into a fresh dot-prefixed staging directory and
+        publish it with ONE `committer.commit`; returns the staged entry
+        names.
+
+        The staging directory is invisible to parquet readers, and the
+        write streams from the old files to new ones, so no plan overwrites
+        its own input and nothing depends on
+        spark.sql.sources.partitionOverwriteMode. The write-ahead-manifest
+        committer renames old entries aside, renames staged ones in and
+        deletes the trash last, so a crash anywhere rolls forward on the
+        next read or merge (ADVICE r2, medium).
+
+        Unpartitioned, the staged files replace every live data file.
+        Partitioned, each staged partition replaces its live directory, and
+        a touched partition that staged nothing (every row tombstoned or
+        purged) is removed, as Hudi removes an emptied file group. Its
+        directory is named from Spark's own rendering of the value, so
+        escaped characters, NULL, bool and double partitions all match what
+        is on disk."""
         staging = os.path.join(self.path, f".bss_staging_{uuid.uuid4().hex[:12]}")
-        writer = merged.write.mode("overwrite")
+        writer = df.write.mode("overwrite")
         if self.partition_col is not None:
             writer = writer.partitionBy(self.partition_col)
         writer.parquet(staging)
 
-        if self.partition_col is not None:
-            staged = [
-                n for n in os.listdir(staging) if not n.startswith((".", "_"))
-            ]
-            # a touched partition whose rows were ALL tombstoned writes no
-            # staging dir — remove its old files (mirrors Hudi removing an
-            # emptied file group); dir names use Spark's percent-escaping
-            # so special characters and nulls match what is on disk
-            staged_set = set(staged)
-            emptied = [
-                name
-                for name in (
-                    partition_dirname(self.partition_col, v) for v in touched or []
-                )
-                if name not in staged_set
-                and os.path.exists(os.path.join(self.path, name))
-            ]
+        staged = [n for n in os.listdir(staging) if not n.startswith((".", "_"))]
+        if self.partition_col is None:
+            live = [n for n in os.listdir(self.path) if not n.startswith((".", "_"))]
         else:
-            staged = [n for n in os.listdir(staging) if not n.startswith(".")]
-            staged_set = set(staged)
-            emptied = [
-                n
-                for n in os.listdir(self.path)
-                if not n.startswith((".", "_")) and n not in staged_set
-            ]
+            live = [partition_dirname(self.partition_col, s) for _, s in touched or []]
+        emptied = [
+            n
+            for n in live
+            if n not in staged and os.path.exists(os.path.join(self.path, n))
+        ]
         self.committer.commit(staging, staged, emptied)
-
-        with open(self._schema_sidecar, "w", encoding="utf-8") as fh:
-            json.dump(merged.schema.jsonValue(), fh)
+        return staged
 
     def merge_into(
         self,
@@ -680,61 +730,23 @@ class UpsertTable:
             return 0
         kcols = list(self.key_cols)
         purge = keys.select(*kcols).dropDuplicates(kcols)
-        table_df = self.read()
-
+        touched = None
         if self.partition_col is not None:
-            touched = [
-                r[0]
-                for r in table_df.select(self.partition_col, *kcols)
-                .join(purge, on=kcols, how="left_semi")
-                .select(self.partition_col)
-                .distinct()
-                .collect()
-            ]
+            touched = _touched_partitions(
+                self.read()
+                .select(self.partition_col, *kcols)
+                .join(purge, on=kcols, how="left_semi"),
+                self.partition_col,
+            )
             if not touched:
                 return 0
-            scoped = table_df.filter(F.col(self.partition_col).isin(touched))
-        else:
-            touched = None
-            scoped = table_df
+        scoped = self._read_touched(touched)
         # deleted-row count from the SCOPED semi-join — never a full-table
         # count (at 100 TB the purge must only ever read touched partitions)
         deleted = scoped.join(purge, on=kcols, how="left_semi").count()
         if deleted == 0:
             return 0
-        kept = scoped.join(purge, on=kcols, how="left_anti")
-
-        staging = os.path.join(
-            self.path, f".bss_staging_{uuid.uuid4().hex[:12]}"
-        )
-        writer = kept.write.mode("overwrite")
-        if self.partition_col is not None:
-            writer = writer.partitionBy(self.partition_col)
-        writer.parquet(staging)
-
-        if self.partition_col is not None:
-            staged = [
-                n for n in os.listdir(staging) if not n.startswith((".", "_"))
-            ]
-            staged_set = set(staged)
-            emptied = [
-                name
-                for name in (
-                    partition_dirname(self.partition_col, v)
-                    for v in touched or []
-                )
-                if name not in staged_set
-                and os.path.exists(os.path.join(self.path, name))
-            ]
-        else:
-            staged = [n for n in os.listdir(staging) if not n.startswith(".")]
-            staged_set = set(staged)
-            emptied = [
-                n
-                for n in os.listdir(self.path)
-                if not n.startswith((".", "_")) and n not in staged_set
-            ]
-        self.committer.commit(staging, staged, emptied)
+        self._publish(scoped.join(purge, on=kcols, how="left_anti"), touched)
         # erasure extends to history: archived versions still hold the
         # purged bytes, so time travel past this point is forfeited
         self.vacuum(retain_last=1)
@@ -799,18 +811,7 @@ class UpsertTable:
         if self.partition_col is None:
             if _nfiles(self.path) <= max_files_per_partition:
                 return []
-            df = self.read()
-            staging = os.path.join(
-                self.path, f".bss_staging_{uuid.uuid4().hex[:12]}"
-            )
-            df.coalesce(1).write.mode("overwrite").parquet(staging)
-            staged = [n for n in os.listdir(staging) if not n.startswith(".")]
-            emptied = [
-                n
-                for n in os.listdir(self.path)
-                if not n.startswith((".", "_")) and n not in set(staged)
-            ]
-            self.committer.commit(staging, staged, emptied)
+            self._publish(self.read().coalesce(1), None)
             return ["."]
 
         offenders = sorted(
@@ -839,14 +840,7 @@ class UpsertTable:
                 cond = cond | (
                     F.col(self.partition_col) == F.lit(v).cast(ptype)
                 )
-        subset = table_df.filter(cond)
-        staging = os.path.join(self.path, f".bss_staging_{uuid.uuid4().hex[:12]}")
-        (
-            subset.repartition(len(offenders), F.col(self.partition_col))
-            .write.partitionBy(self.partition_col)
-            .mode("overwrite")
-            .parquet(staging)
+        subset = table_df.filter(cond).repartition(
+            len(offenders), F.col(self.partition_col)
         )
-        staged = [n for n in os.listdir(staging) if not n.startswith((".", "_"))]
-        self.committer.commit(staging, staged, [])
-        return sorted(staged)
+        return sorted(self._publish(subset, None))

@@ -20,12 +20,13 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from buskafkasparkstreaming_spark.cdc.envelope import parse_envelopes, route_ops
+from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
 from buskafkasparkstreaming_spark.cdc.upsert import UpsertTable
 
 
 def run_cdc_pipeline(
     value_stream: DataFrame,
-    table: UpsertTable,
+    table: UpsertTable | ManifestUpsertTable,
     checkpoint_dir: str,
     row_schema: T.StructType | None = None,
     quarantine_path: str | None = None,

@@ -493,6 +493,19 @@ def test_purge_keys_physical_erasure(spark, tmp_path):
     assert {r["k"] for r in table.read().collect()} == {2, 3}
 
 
+def test_purge_keys_erases_rows_of_bool_partition(spark, tmp_path):
+    """purge_keys removes a key held in a partition whose directory name
+    Python str() does not render (`p=true`): the row and the emptied
+    directory are gone, and the returned count is what was erased."""
+    table = UpsertTable(
+        spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p"
+    )
+    table.merge(spark.createDataFrame([(1, 10, True), (2, 10, False)], "k int, et int, p boolean"))
+    assert table.purge_keys(spark.createDataFrame([(1,)], "k int")) == 1
+    assert [tuple(r) for r in table.read().collect()] == [(2, 10, False)]
+    assert not os.path.exists(os.path.join(table.path, "p=true"))
+
+
 def _drain(spark, spool, table, tmp_path):
     q = run_cdc_pipeline(
         stream_envelope_jsonl(spark, spool, max_files_per_trigger=1),

@@ -9,6 +9,9 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
+from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
 from buskafkasparkstreaming_spark.cdc.upsert import (
     LocalFSCommitter,
     UpsertTable,
@@ -135,14 +138,13 @@ def test_tombstoned_escaped_partition_is_cleaned(spark, tmp_path):
     assert got == {2}
 
 
-def test_schema_evolution_add_and_drop_column(spark, tmp_path):
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_schema_evolution_add_and_drop_column(spark, tmp_path, cls):
     """A batch may add columns (null-filled on stored rows, including rows
     in untouched partitions) or omit non-key columns (winning rows carry
     null); key/precombine/partition columns must always be present."""
-    import pytest
-
     path = str(tmp_path / "tbl")
-    table = UpsertTable(
+    table = cls(
         spark, path, key_cols="rid", precombine_col="et", partition_col="route"
     )
     v1 = spark.createDataFrame(

@@ -844,6 +844,70 @@ def test_delete_flag_column_is_never_stored(spark, tmp_path, cls):
     assert [(r.k, r.v, r.et) for r in out.collect()] == [(3, 3, 300)]
 
 
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+@pytest.mark.parametrize(
+    "ptype, gone, kept", [("boolean", True, False), ("double", 1e20, 2.0)], ids=["bool", "double"]
+)
+def test_tombstone_removes_rows_of_bool_and_double_partitions(spark, tmp_path, cls, ptype, gone, kept):
+    """A tombstone removes its key from a partition whose directory name
+    Python str() does not render (`p=true`, `p=1.0E20`), on either commit
+    protocol."""
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
+    t.merge(spark.createDataFrame([(1, 10, gone), (2, 10, kept)], f"k int, et int, p {ptype}"))
+    t.merge(
+        spark.createDataFrame([(1, 20, gone, True)], f"k int, et int, p {ptype}, d boolean"),
+        delete_col="d",
+    )
+    assert [tuple(r) for r in t.read().collect()] == [(2, 10, kept)]
+
+
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_merge_keeps_stored_rows_of_null_partition(spark, tmp_path, cls):
+    """A merge into the NULL partition reads back the rows stored there."""
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
+    t.merge(spark.createDataFrame([(1, 10, None), (3, 10, "a")], "k int, et int, p string"))
+    t.merge(spark.createDataFrame([(2, 10, None)], "k int, et int, p string"))
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, 10, None), (2, 10, None), (3, 10, "a")]
+
+
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_merge_into_new_partition_keeps_stored_columns(spark, tmp_path, cls):
+    """A batch that touches only a new partition and omits a stored column
+    keeps that column in the table schema: stored rows still read it."""
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
+    t.merge(spark.createDataFrame([(1, 10, "a", 5)], "k int, et int, p string, h int"))
+    t.merge(spark.createDataFrame([(2, 10, "b")], "k int, et int, p string"))
+    got = {r.k: r.h for r in t.read().collect()}
+    assert got == {1: 5, 2: None}
+
+
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_merge_spark_job_count(spark, tmp_path, cls):
+    """Regression guard on the merge's Spark jobs, counted under a job
+    group on a stored two-partition table: an insert-only merge and a
+    delete merge each run 4 jobs on either protocol (the touched-partition
+    collect and the staged write, each with its shuffle stage)."""
+    sc = spark.sparkContext
+    schema = "k int, v int, p int, et int"
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
+    t.merge(spark.createDataFrame([(1, 1, 0, 100), (2, 2, 1, 100)], schema))
+
+    def jobs(group, batch, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            t.merge(batch, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    inserts = spark.createDataFrame([(3, 3, 0, 100), (4, 4, 1, 100)], schema)
+    assert jobs(f"insert-merge-{cls.__name__}", inserts) == 4
+    deletes = spark.createDataFrame([(1, 1, 0, 200, True)], f"{schema}, d boolean")
+    assert jobs(f"delete-merge-{cls.__name__}", deletes, delete_col="d") == 4
+    assert sorted((r.k, r.p) for r in t.read().collect()) == [(2, 1), (3, 0), (4, 1)]
+
+
 def test_manifest_entries_layout_independent_of_session_shuffle_width(spark):
     """Round-14 hardening pin: the three compaction entries own their
     decay-mode merge layout (AQE off + a PINNED shuffle width), so their

@@ -1,12 +1,15 @@
 """Property-based invariant (SURVEY §5.5): after merging any sequence of
 change batches, the table state equals `argmax(precombine) per key of all
-upserted images, minus keys whose winning row is a tombstone`."""
+upserted images, minus keys whose winning row is a tombstone`, on either
+commit protocol (so the two protocols also land in identical states)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
 from buskafkasparkstreaming_spark.cdc.upsert import UpsertTable
 
 # routeId is derived from record_id (partition-stable keys): the merge has
@@ -51,11 +54,12 @@ def reference_merge(batches):
     return {rid: (route, kph, et) for rid, (et, s, route, kph) in state.items()}
 
 
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(batch1=changes, batch2=changes)
-def test_upsert_matches_reference(spark, tmp_path_factory, batch1, batch2):
+def test_upsert_matches_reference(spark, tmp_path_factory, cls, batch1, batch2):
     path = str(tmp_path_factory.mktemp("upsert"))
-    table = UpsertTable(
+    table = cls(
         spark,
         path,
         key_cols="record_id",
@@ -81,49 +85,3 @@ def test_upsert_matches_reference(spark, tmp_path_factory, batch1, batch2):
     }
     want = reference_merge([batch1, batch2])
     assert got == want
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(batch1=changes, batch2=changes)
-def test_manifest_table_matches_rename_table(
-    spark, tmp_path_factory, batch1, batch2
-):
-    """Storage-protocol equivalence: the object-store manifest table and
-    the rename-committer table must land in IDENTICAL states for any merge
-    sequence — the protocols differ, the merge algebra must not."""
-    from buskafkasparkstreaming_spark.cdc.manifest_table import (
-        ManifestUpsertTable,
-    )
-
-    kw = dict(
-        key_cols="record_id",
-        precombine_col="event_time",
-        partition_col="routeId",
-        tiebreak_cols=["seq"],
-    )
-    t_fs = UpsertTable(spark, str(tmp_path_factory.mktemp("fs")), **kw)
-    t_obj = ManifestUpsertTable(
-        spark, str(tmp_path_factory.mktemp("obj")), **kw
-    )
-    seq = 0
-    for batch in (batch1, batch2):
-        rows = []
-        for rid, route, kph, et, is_del in batch:
-            rows.append((rid, route, kph, et, is_del, seq))
-            seq += 1
-        df = spark.createDataFrame(
-            rows,
-            "record_id int, routeId int, kph int, event_time int, "
-            "_is_delete boolean, seq int",
-        )
-        t_fs.merge(df, delete_col="_is_delete")
-        t_obj.merge(df, delete_col="_is_delete")
-
-    def state(t):
-        return {
-            r["record_id"]: (r["routeId"], r["kph"], r["event_time"])
-            for r in t.read().collect()
-        }
-
-    assert state(t_fs) == state(t_obj)
-    assert state(t_fs) == reference_merge([batch1, batch2])
