@@ -3838,15 +3838,16 @@ def q_interval_contain_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_diff_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-feed between table versions (Delta CDF analog,
-    cdc/upsert.py::diff_versions): two merges into a retained-version
-    upsert table, then the v1→v2 changelog — one row per key whose
-    latest-state row changed, labeled insert/update. Pure relational
-    (full-outer key join of two time-travel reads + null-safe struct
-    compare); the oracle replays both precombine argmaxes and the diff."""
+    cdc/manifest_table.py::diff_versions): two merges into an
+    unpartitioned manifest table, then the changelog from its first to
+    its last retained version — one row per key whose latest-state row
+    changed, labeled insert/update. Pure relational (full-outer key join
+    of two `read_version` reads + null-safe struct compare); the oracle
+    replays both precombine argmaxes and the diff."""
     import shutil as _shutil
     import tempfile
 
-    from buskafkasparkstreaming_spark.cdc.upsert import UpsertTable
+    from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
 
     # per-invocation working dir removed in a finally (the prmon
     # pattern, round-13 fleet conversion); result eager-checkpointed
@@ -3856,18 +3857,17 @@ def cdc_diff_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _t(spark, sf_dir, "events").filter(
             F.col("user_id").isNotNull() & F.col("ts").isNotNull()
         )
-        t = UpsertTable(
+        t = ManifestUpsertTable(
             spark,
             work,
             key_cols="user_id",
             precombine_col="ts",
             tiebreak_cols=["event_id"],
-            retain_versions=True,
         )
         t.merge(ev.filter(F.col("event_id") % 2 == 0))
         t.merge(ev.filter(F.col("event_id") % 2 == 1))
-        log = t.history()
-        out = t.diff_versions(log[0]["seq"], log[-1]["seq"])
+        versions = t.history()
+        out = t.diff_versions(versions[0], versions[-1])
         return out.select(
             F.col("user_id").cast("long").alias("user_id"), "change_type"
         ).localCheckpoint(eager=True)

@@ -179,6 +179,30 @@ class ManifestUpsertTable:
         Hudi-timeline / Iceberg-snapshot analog)."""
         return self._read_manifest_df(self._manifest_at(version))
 
+    def diff_versions(self, from_version: int, to_version: int) -> DataFrame:
+        """Changelog between two retained versions (Delta CDF analog): one
+        row per key whose state changed, labeled insert/update/delete.
+        Pure relational: full-outer key join of the two `read_version`
+        reads, null-safe struct comparison for the update test — no stored
+        change log needed beyond the retained manifests."""
+        a = self.read_version(from_version)
+        b = self.read_version(to_version)
+        keys = self.key_cols
+        cols = [c for c in b.columns if c not in keys]
+        a_s = a.select(*keys, F.struct(*cols).alias("__a"))
+        b_s = b.select(*keys, F.struct(*cols).alias("__b"))
+        j = a_s.join(b_s, keys, "full_outer")
+        change = (
+            F.when(F.col("__a").isNull(), F.lit("insert"))
+            .when(F.col("__b").isNull(), F.lit("delete"))
+            .when(~F.col("__a").eqNullSafe(F.col("__b")), F.lit("update"))
+        )
+        return (
+            j.withColumn("change_type", change)
+            .filter(F.col("change_type").isNotNull())
+            .select(*keys, "change_type")
+        )
+
     def read(self) -> DataFrame:
         """Read exactly the objects the current manifest lists (never a
         directory listing), in one plain scan: each object holds its own
@@ -622,14 +646,14 @@ class ManifestUpsertTable:
         # resolve the same version, and a lost version race retries whole
         m = self._current_manifest()
 
-        def read_touched(touched: list | None) -> DataFrame | None:
-            if m is None:
-                return None
+        def read_touched(touched: list | None) -> DataFrame:
             out = self._read_objects(m, vals=self._touched_keys(touched))
             # no stored object in the touched partitions: an empty frame of
             # the stored schema still carries the columns this batch omits
             return self._empty(m) if out is None else out
 
+        # a new table stores nothing: no read-back, so no touched-partition
+        # collect either (precombine_merge skips it)
         merged, touched = precombine_merge(
             batch,
             self.key_cols,
@@ -637,13 +661,15 @@ class ManifestUpsertTable:
             self.partition_col,
             self.tiebreak_cols,
             delete_col,
-            read_touched,
+            read_touched if m is not None else None,
         )
         staged = self._stage(merged)
-        partitions = dict(m["partitions"]) if m is not None else {}
-        for val_str in self._touched_keys(touched):
-            # fully-tombstoned partition: no staged objects -> empty list
-            partitions[val_str] = staged.objs.get(val_str, [])
+        partitions = {}
+        if m is not None:
+            partitions = dict(m["partitions"])
+            for val_str in self._touched_keys(touched):
+                # fully-tombstoned partition: no staged objects -> empty list
+                partitions[val_str] = staged.objs.get(val_str, [])
         partitions.update(staged.objs)
         self._commit(m, partitions, merged.schema.jsonValue(), staged)
 

@@ -96,61 +96,17 @@ class LocalFSCommitter:
     commit ROLLS FORWARD idempotently; staging/trash leftovers without a
     manifest are pre-publish garbage and are dropped.
 
-    Object stores have no atomic rename — an S3 committer implements the
-    same interface with write-to-unique-keys + a last-wins manifest object
-    (readers resolve the manifest, never list) and deferred GC of
-    superseded keys; see SCALE.md. The manifest also closes the
-    reader-visible mixed-state window: readers that resolve file sets via
-    the manifest see either the old or the new set, never a mix.
+    Object stores have no atomic rename, so this protocol is local-only:
+    `cdc.manifest_table.ManifestUpsertTable` is the object-store protocol
+    (write-once objects under unique keys, one create-exclusive manifest
+    object per version that readers resolve instead of listing, deferred
+    GC of superseded objects; SCALE.md derives it from this contract). It
+    is also the table with time travel: this committer keeps no version
+    history, and phase C deletes what each commit replaced.
     """
 
-    LOG_DIR = ".bss_log"
-    ARCHIVE_DIR = ".bss_archive"
-
-    def __init__(self, path: str, retain_versions: bool = False) -> None:
-        """`retain_versions=True` turns each commit's phase-C cleanup into
-        retention: replaced entries move to `.bss_archive/<txn>/` instead
-        of being deleted, and the commit is appended to `.bss_log/` as
-        `<seq>_<txn>.json` — the history `UpsertTable.read_as_of()` replays
-        (Hudi keeps a timeline + archived file slices for the same
-        purpose). The crash protocol is unchanged: archive + log-append
-        happen before the manifest is removed and both are idempotent per
-        txn, so a crash anywhere still rolls forward to exactly one
-        archived copy and one log row."""
+    def __init__(self, path: str) -> None:
         self.path = path
-        self.retain_versions = retain_versions
-
-    # -- retention log -------------------------------------------------------
-    def _log_dir(self) -> str:
-        return os.path.join(self.path, self.LOG_DIR)
-
-    def log_entries(self) -> list[dict]:
-        """Commit history, oldest first: [{seq, txn, staged, emptied}]."""
-        d = self._log_dir()
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for name in sorted(n for n in os.listdir(d) if n.endswith(".json")):
-            with open(os.path.join(d, name), encoding="utf-8") as fh:
-                out.append(json.load(fh))
-        return out
-
-    def _append_log(self, txn: str, plan: dict) -> None:
-        d = self._log_dir()
-        os.makedirs(d, exist_ok=True)
-        if any(n.endswith(f"_{txn}.json") for n in os.listdir(d)):
-            return  # crash-rerun of phase C: already appended
-        seq = sum(1 for n in os.listdir(d) if n.endswith(".json")) + 1
-        row = {
-            "seq": seq,
-            "txn": txn,
-            "staged": plan["staged"],
-            "emptied": plan["emptied"],
-        }
-        tmp = os.path.join(d, f".{seq:08d}_{txn}.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(row, fh)
-        os.rename(tmp, os.path.join(d, f"{seq:08d}_{txn}.json"))
 
     def _manifests(self) -> list[str]:
         if not os.path.isdir(self.path):
@@ -221,16 +177,9 @@ class LocalFSCommitter:
             in_staging = os.path.join(staging, name)
             if os.path.exists(in_staging):
                 os.rename(in_staging, os.path.join(self.path, name))
-        # phase C: retain or drop the superseded entries, retire the
-        # manifest LAST (so a crash reruns this phase idempotently), then
-        # clear staging remains
-        txn = plan["trash"].rsplit("_", 1)[-1]
-        if self.retain_versions:
-            dst = os.path.join(self.path, self.ARCHIVE_DIR, txn)
-            if os.path.isdir(trash) and not os.path.exists(dst):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(trash, dst)
-            self._append_log(txn, plan)
+        # phase C: retire the manifest, then drop the superseded entries and
+        # the staging remains (a crash before the manifest is gone reruns
+        # every phase idempotently)
         os.remove(manifest)
         shutil.rmtree(trash, ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
@@ -404,7 +353,6 @@ class UpsertTable:
         precombine_col: str,
         partition_col: str | None = None,
         tiebreak_cols: list[str] | None = None,
-        retain_versions: bool = False,
     ) -> None:
         self.spark = spark
         self.path = path
@@ -412,7 +360,7 @@ class UpsertTable:
         self.precombine_col = precombine_col
         self.partition_col = partition_col
         self.tiebreak_cols = tiebreak_cols or []
-        self.committer = LocalFSCommitter(path, retain_versions=retain_versions)
+        self.committer = LocalFSCommitter(path)
 
     # -- read ----------------------------------------------------------------
     def exists(self) -> bool:
@@ -428,13 +376,16 @@ class UpsertTable:
     def read(self) -> DataFrame:
         """Read the table. Uses the schema sidecar written by merge() — this
         both skips schema inference and keeps a fully-tombstoned (empty)
-        table readable."""
+        table readable — in the sidecar's column order: partition discovery
+        appends the partition column, and the manifest table keeps the
+        merged order."""
         if os.path.exists(self._schema_sidecar):
             from pyspark.sql.types import StructType
 
             with open(self._schema_sidecar, encoding="utf-8") as fh:
                 schema = StructType.fromJson(json.load(fh))
-            return self.spark.read.schema(schema).parquet(self.path)
+            out = self.spark.read.schema(schema).parquet(self.path)
+            return out.select(*schema.fieldNames())
         return self.spark.read.parquet(self.path)
 
     def register(self, view_name: str) -> DataFrame:
@@ -607,115 +558,18 @@ class UpsertTable:
             batch = batch.unionByName(p)
         self.merge(batch, delete_col="__del")
 
-    # -- time travel ---------------------------------------------------------
-    def history(self) -> list[dict]:
-        """Commit history (oldest first) when built with
-        `retain_versions=True`: [{seq, txn, staged, emptied}]."""
-        self.committer.recover()
-        return self.committer.log_entries()
-
-    def read_as_of(self, seq: int) -> DataFrame:
-        """Read the table AS OF commit `seq` (Hudi/Delta time travel).
-
-        Resolution is pure log replay — no data is ever copied for it:
-        the entry set at version V is the staged/emptied replay up to V,
-        and each entry's content is (a) still live if no later commit
-        replaced it, else (b) in the archive of the EARLIEST later commit
-        that replaced it (that commit moved exactly the version-V content
-        aside). Partition values are re-attached from the entry dirname,
-        since archived partition dirs sit outside the table's base path.
-
-        Versions older than the last `vacuum(retain_last=K)` raise — their
-        archives are gone by definition.
-        """
-        log = self.history()
-        if not self.committer.retain_versions:
-            raise ValueError("table was not built with retain_versions=True")
-        upto = [c for c in log if c["seq"] <= seq]
-        if not upto:
-            raise ValueError(f"no commit with seq <= {seq}")
-        later = [c for c in log if c["seq"] > seq]
-
-        entries: set[str] = set()
-        for c in upto:
-            entries -= set(c["emptied"])
-            entries |= set(c["staged"])
-        paths: dict[str, str] = {}
-        for e in sorted(entries):
-            loc = os.path.join(self.path, e)
-            for c in later:  # earliest later replacement holds version V
-                if e in c["staged"] or e in c["emptied"]:
-                    loc = os.path.join(
-                        self.path, LocalFSCommitter.ARCHIVE_DIR, c["txn"], e
-                    )
-                    break
-            if not os.path.exists(loc):
-                raise ValueError(
-                    f"version {seq} is no longer readable: {e} was vacuumed"
-                )
-            paths[e] = loc
-
-        from pyspark.sql.types import StructType
-
-        with open(self._schema_sidecar, encoding="utf-8") as fh:
-            schema = StructType.fromJson(json.load(fh))
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        if self.partition_col is None:
-            return self.spark.read.schema(schema).parquet(*paths.values())
-        ptype = schema[self.partition_col].dataType
-        data_schema = StructType(
-            [f for f in schema.fields if f.name != self.partition_col]
-        )
-        out: DataFrame | None = None
-        for e, loc in paths.items():
-            val = partition_dirvalue(e)
-            part = self.spark.read.schema(data_schema).parquet(loc)
-            pcol = (
-                F.lit(val).cast(ptype)
-                if val is not None
-                else F.lit(None).cast(ptype)
-            )
-            part = part.withColumn(self.partition_col, pcol)
-            out = part if out is None else out.unionByName(part)
-        return out
-
-    def diff_versions(self, from_seq: int, to_seq: int) -> DataFrame:
-        """Changelog between two retained commits (Delta CDF analog): one
-        row per key whose state changed, labeled insert/update/delete.
-        Pure relational: full-outer key join of the two time-travel reads,
-        null-safe struct comparison for the update test — no stored change
-        log needed beyond what retain_versions already keeps."""
-        a = self.read_as_of(from_seq)
-        b = self.read_as_of(to_seq)
-        keys = self.key_cols
-        cols = [c for c in b.columns if c not in keys]
-        a_s = a.select(*keys, F.struct(*cols).alias("__a"))
-        b_s = b.select(*keys, F.struct(*cols).alias("__b"))
-        j = a_s.join(b_s, keys, "full_outer")
-        change = (
-            F.when(F.col("__a").isNull(), F.lit("insert"))
-            .when(F.col("__b").isNull(), F.lit("delete"))
-            .when(~F.col("__a").eqNullSafe(F.col("__b")), F.lit("update"))
-        )
-        return (
-            j.withColumn("change_type", change)
-            .filter(F.col("change_type").isNotNull())
-            .select(*keys, "change_type")
-        )
-
     def purge_keys(self, keys: DataFrame) -> int:
         """GDPR right-to-be-forgotten: physically REMOVE every row whose
         key appears in `keys` (a DataFrame carrying the table's key
-        columns), then vacuum all non-current versions.
+        columns).
 
         This is deliberately NOT a tombstone merge: a tombstone masks the
-        key from reads but the bytes stay in the parquet files (and in
-        archived versions) — which fails an erasure request. purge_keys
-        rewrites the affected files via the same staging + write-ahead-
-        manifest commit as merge() (crash-safe, readers never see a mixed
-        file set) and then drops the archive history, so after it returns
-        no retained file on disk contains the purged keys.
+        key from reads but the bytes stay in the parquet files — which
+        fails an erasure request. purge_keys rewrites the affected files
+        via the same staging + write-ahead-manifest commit as merge()
+        (crash-safe, readers never see a mixed file set), and the commit
+        deletes the files it replaced; this table keeps no older versions,
+        so after it returns no file on disk contains the purged keys.
 
         Scale shape: one scan of key+partition columns semi-joined to the
         purge set finds the TOUCHED partitions (at 100 TB the purge set is
@@ -747,32 +601,7 @@ class UpsertTable:
         if deleted == 0:
             return 0
         self._publish(scoped.join(purge, on=kcols, how="left_anti"), touched)
-        # erasure extends to history: archived versions still hold the
-        # purged bytes, so time travel past this point is forfeited
-        self.vacuum(retain_last=1)
         return deleted
-
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        """Drop archived versions not needed to time-travel the last
-        `retain_last` commits. Versions >= the cutoff only resolve through
-        archives of LATER commits, so every archive at or before the
-        cutoff commit is removable. Returns removed txn ids."""
-        log = self.history()
-        if retain_last < 1:
-            raise ValueError("retain_last must be >= 1")
-        if len(log) <= retain_last:
-            return []
-        cutoff_seq = log[-retain_last]["seq"]
-        removed = []
-        for c in log:
-            if c["seq"] <= cutoff_seq:
-                d = os.path.join(
-                    self.path, LocalFSCommitter.ARCHIVE_DIR, c["txn"]
-                )
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-                    removed.append(c["txn"])
-        return removed
 
     # -- maintenance ---------------------------------------------------------
     def compact(

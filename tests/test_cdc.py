@@ -268,16 +268,17 @@ def test_compact_unpartitioned_table(spark, tmp_path):
 
 
 def test_time_travel_read_as_of(spark, tmp_path):
-    """retain_versions: every commit stays readable via log replay —
-    updates, deletes, and the latest state all resolve correctly; vacuum
-    drops exactly the no-longer-needed archives."""
-    table = UpsertTable(
+    """Time travel lives on the manifest table: every version stays
+    readable — updates, deletes across two partitions, and the latest
+    state all resolve correctly; vacuum drops exactly the older versions."""
+    from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
+
+    table = ManifestUpsertTable(
         spark,
         str(tmp_path / "tbl"),
         key_cols="k",
         precombine_col="v",
         partition_col="p",
-        retain_versions=True,
     )
     b1 = spark.createDataFrame(
         [(1, 10, 0), (2, 10, 1), (3, 10, 0), (4, 10, 1)], "k int, v int, p int"
@@ -290,59 +291,35 @@ def test_time_travel_read_as_of(spark, tmp_path):
     )
     table.merge(b3, delete_col="del")
 
-    hist = table.history()
-    assert [c["seq"] for c in hist] == [1, 2, 3]
+    assert table.history() == [0, 1, 2]
 
     def state(df):
         return {(r.k, r.v, r.p) for r in df.select("k", "v", "p").collect()}
 
-    assert state(table.read_as_of(1)) == {(1, 10, 0), (2, 10, 1), (3, 10, 0), (4, 10, 1)}
-    assert state(table.read_as_of(2)) == {(1, 20, 0), (2, 20, 1), (3, 10, 0), (4, 10, 1)}
-    assert state(table.read_as_of(3)) == {(1, 20, 0), (2, 20, 1), (4, 10, 1)}
-    assert state(table.read_as_of(3)) == state(table.read())
+    assert state(table.read_version(0)) == {(1, 10, 0), (2, 10, 1), (3, 10, 0), (4, 10, 1)}
+    assert state(table.read_version(1)) == {(1, 20, 0), (2, 20, 1), (3, 10, 0), (4, 10, 1)}
+    assert state(table.read_version(2)) == {(1, 20, 0), (2, 20, 1), (4, 10, 1)}
+    assert state(table.read_version(2)) == state(table.read())
 
-    removed = table.vacuum(retain_last=1)
-    assert removed  # older archives dropped
-    assert state(table.read_as_of(3)) == state(table.read())  # latest intact
-    with pytest.raises(ValueError, match="vacuumed"):
-        table.read_as_of(1)
-
-
-def test_retention_log_append_is_idempotent(tmp_path):
-    from buskafkasparkstreaming_spark.cdc.upsert import LocalFSCommitter
-
-    c = LocalFSCommitter(str(tmp_path), retain_versions=True)
-    plan = {"staged": ["p=1"], "emptied": []}
-    c._append_log("abc123", plan)
-    c._append_log("abc123", plan)  # crash-rerun of phase C
-    assert [e["txn"] for e in c.log_entries()] == ["abc123"]
-    assert c.log_entries()[0]["seq"] == 1
-
-
-def test_default_table_retains_nothing(spark, tmp_path):
-    """Without retain_versions the commit path must stay exactly as
-    before: no log dir, no archive dir."""
-    table = UpsertTable(
-        spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="v"
-    )
-    table.merge(spark.createDataFrame([(1, 1)], "k int, v int"))
-    table.merge(spark.createDataFrame([(1, 2)], "k int, v int"))
-    names = set(os.listdir(str(tmp_path / "tbl")))
-    assert ".bss_log" not in names and ".bss_archive" not in names
-    with pytest.raises(ValueError, match="retain_versions"):
-        table.read_as_of(1)
+    removed = table.vacuum(keep_manifests=1)
+    assert removed  # older versions dropped
+    assert table.history() == [2]
+    assert state(table.read_version(2)) == state(table.read())  # latest intact
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        table.read_version(0)
 
 
 def test_diff_versions_changelog(spark, tmp_path):
     """Delta-CDF-style changelog from time travel: insert/update/delete
-    labels between any two retained commits."""
-    table = UpsertTable(
+    labels between any two retained manifest versions."""
+    from buskafkasparkstreaming_spark.cdc.manifest_table import ManifestUpsertTable
+
+    table = ManifestUpsertTable(
         spark,
         str(tmp_path / "tbl"),
         key_cols="k",
         precombine_col="v",
         partition_col="p",
-        retain_versions=True,
     )
     table.merge(spark.createDataFrame(
         [(1, 10, 0), (2, 10, 1), (3, 10, 0), (4, 10, 1)], "k int, v int, p int"
@@ -354,14 +331,15 @@ def test_diff_versions_changelog(spark, tmp_path):
         spark.createDataFrame([(3, 30, 0, True)], "k int, v int, p int, del boolean"),
         delete_col="del",
     )
+    assert table.history() == [0, 1, 2]
 
     def diff(a, b):
         return {(r.k, r.change_type) for r in table.diff_versions(a, b).collect()}
 
-    assert diff(1, 2) == {(1, "update"), (2, "update"), (5, "insert")}
-    assert diff(2, 3) == {(3, "delete")}
-    assert diff(1, 3) == {(1, "update"), (2, "update"), (5, "insert"), (3, "delete")}
-    assert diff(3, 3) == set()
+    assert diff(0, 1) == {(1, "update"), (2, "update"), (5, "insert")}
+    assert diff(1, 2) == {(3, "delete")}
+    assert diff(0, 2) == {(1, "update"), (2, "update"), (5, "insert"), (3, "delete")}
+    assert diff(2, 2) == set()
 
 
 def test_merge_into_tri_clause(spark, tmp_path):
@@ -434,10 +412,10 @@ def test_merge_into_tri_clause(spark, tmp_path):
 
 def test_purge_keys_physical_erasure(spark, tmp_path):
     """purge_keys is ERASURE, not masking: purged keys vanish from the
-    live read, from every parquet byte under the table dir, and from the
-    archive (history is vacuumed); an all-purged partition's directory is
-    removed; untouched partitions keep their files (mtime unchanged);
-    purging an absent key is a no-op returning 0."""
+    live read and from every parquet byte under the table dir; an
+    all-purged partition's directory is removed; untouched partitions keep
+    their files (mtime unchanged); purging an absent key is a no-op
+    returning 0."""
     import glob
     import os
 
@@ -447,7 +425,6 @@ def test_purge_keys_physical_erasure(spark, tmp_path):
         key_cols="k",
         precombine_col="v",
         partition_col="p",
-        retain_versions=True,
     )
     b1 = spark.createDataFrame(
         [(1, 10, 0), (2, 10, 1), (3, 10, 0), (4, 10, 2)],
@@ -477,17 +454,6 @@ def test_purge_keys_physical_erasure(spark, tmp_path):
         *glob.glob(os.path.join(table.path, "**", "*.parquet"), recursive=True)
     )
     assert residual.filter(residual["k"].isin(1, 4)).count() == 0
-    # archives are vacuumed down to the current version only
-    assert len(table.history()) >= 1
-    from buskafkasparkstreaming_spark.cdc.upsert import LocalFSCommitter
-
-    arch = os.path.join(table.path, LocalFSCommitter.ARCHIVE_DIR)
-    live_archives = (
-        [d for d in os.listdir(arch) if not d.startswith(".")]
-        if os.path.isdir(arch)
-        else []
-    )
-    assert len(live_archives) <= 1
     # purging an absent key: no-op, 0 deleted, state unchanged
     assert table.purge_keys(spark.createDataFrame([(99,)], "k int")) == 0
     assert {r["k"] for r in table.read().collect()} == {2, 3}

@@ -884,13 +884,14 @@ def test_merge_into_new_partition_keeps_stored_columns(spark, tmp_path, cls):
 @pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
 def test_merge_spark_job_count(spark, tmp_path, cls):
     """Regression guard on the merge's Spark jobs, counted under a job
-    group on a stored two-partition table: an insert-only merge and a
-    delete merge each run 4 jobs on either protocol (the touched-partition
-    collect and the staged write, each with its shuffle stage)."""
+    group on a two-partition table: the first merge runs 2 jobs on either
+    protocol (the staged write with its shuffle stage; nothing is stored,
+    so there is no touched-partition collect), and an insert-only merge
+    and a delete merge into the stored table each run 4 (the collect and
+    the staged write, each with its shuffle stage)."""
     sc = spark.sparkContext
     schema = "k int, v int, p int, et int"
     t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
-    t.merge(spark.createDataFrame([(1, 1, 0, 100), (2, 2, 1, 100)], schema))
 
     def jobs(group, batch, **kw):
         sc.setJobGroup(group, group)
@@ -901,11 +902,25 @@ def test_merge_spark_job_count(spark, tmp_path, cls):
             sc.setLocalProperty("spark.job.description", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
+    first = spark.createDataFrame([(1, 1, 0, 100), (2, 2, 1, 100)], schema)
+    assert jobs(f"first-merge-{cls.__name__}", first) == 2
     inserts = spark.createDataFrame([(3, 3, 0, 100), (4, 4, 1, 100)], schema)
     assert jobs(f"insert-merge-{cls.__name__}", inserts) == 4
     deletes = spark.createDataFrame([(1, 1, 0, 200, True)], f"{schema}, d boolean")
     assert jobs(f"delete-merge-{cls.__name__}", deletes, delete_col="d") == 4
     assert sorted((r.k, r.p) for r in t.read().collect()) == [(2, 1), (3, 0), (4, 1)]
+
+
+@pytest.mark.parametrize("cls", [UpsertTable, ManifestUpsertTable], ids=["rename", "manifest"])
+def test_read_keeps_merged_column_order(spark, tmp_path, cls):
+    """Both protocols read the same merges back in the same column order,
+    the merged schema's, with the partition column where the batch put it."""
+    t = cls(spark, str(tmp_path / "tbl"), key_cols="k", precombine_col="et", partition_col="p")
+    t.merge(spark.createDataFrame([(1, 10, "a", 5)], "k int, et int, p string, h int"))
+    t.merge(spark.createDataFrame([(2, 10, "b")], "k int, et int, p string"))
+    out = t.read()
+    assert out.columns == ["k", "et", "p", "h"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 10, "a", 5), (2, 10, "b", None)]
 
 
 def test_manifest_entries_layout_independent_of_session_shuffle_width(spark):
